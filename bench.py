@@ -136,46 +136,21 @@ def main() -> None:
     timed("q_fingerprint", _fingerprint)
     fp = spark.read.parquet(fp_path)
 
-    # Candidate-table caches are scoped (caller-owned, released right
-    # after the consuming localCheckpoint — nothing persists past the
-    # stage).
-    fuse_pairs = os.environ.get("SPARK_GRAFT_FUSE_PAIRS") == "1"
-    if fuse_pairs:
-        # Scaling-leg mode (scripts/scaling_run.py): both near-dup pair
-        # families in ONE action — shared fingerprint scan, one job
-        # submission, one localCheckpoint — so the per-stage fixed floor
-        # (~9s of job-submission/AQE/barrier cost per action measured in
-        # BENCH/ANALYSIS_r2.md) is paid once, not twice. Reported as
-        # q_dup_pairs; compare against q_minhash_lsh_pairs +
-        # q_simhash_pairs of unfused runs.
-        def _near_pairs():
-            with CacheScope() as scope:
-                return (
-                    LSH.minhash_dup_pairs(
-                        fp, DEFAULT, mode="estimate", scope=scope
-                    )
-                    .unionByName(SB.simhash_dup_pairs(fp, DEFAULT, scope=scope))
-                    .localCheckpoint(eager=True)
-                )
+    # Both near-dup pair families in ONE action — shared fingerprint
+    # scan, one job submission, one localCheckpoint — so the per-stage
+    # fixed floor (~9s of job-submission/AQE/barrier cost per action
+    # measured in BENCH/ANALYSIS_r2.md) is paid once, not twice. The
+    # candidate-table caches are scoped (caller-owned, released right
+    # after the consuming localCheckpoint).
+    def _near_pairs():
+        with CacheScope() as scope:
+            return (
+                LSH.minhash_dup_pairs(fp, DEFAULT, mode="estimate", scope=scope)
+                .unionByName(SB.simhash_dup_pairs(fp, DEFAULT, scope=scope))
+                .localCheckpoint(eager=True)
+            )
 
-        near_pairs = timed("q_dup_pairs", _near_pairs)
-    else:
-
-        def _minhash():
-            with CacheScope() as scope:
-                return LSH.minhash_dup_pairs(
-                    fp, DEFAULT, mode="estimate", scope=scope
-                ).localCheckpoint(eager=True)
-
-        def _simhash():
-            with CacheScope() as scope:
-                return SB.simhash_dup_pairs(
-                    fp, DEFAULT, scope=scope
-                ).localCheckpoint(eager=True)
-
-        minhash_pairs = timed("q_minhash_lsh_pairs", _minhash)
-        simhash_pairs = timed("q_simhash_pairs", _simhash)
-        near_pairs = minhash_pairs.unionByName(simhash_pairs)
+    near_pairs = timed("q_dup_pairs", _near_pairs)
 
     # Quotient-graph CC (round 4): near pairs connect only exact-dup
     # keepers (fingerprints were computed on survivors), so label
@@ -237,17 +212,12 @@ def main() -> None:
 
     timed("q_embedding_lsh_topk", _ann)
 
-    pair_keys = (
-        ("q_dup_pairs",)
-        if fuse_pairs
-        else ("q_minhash_lsh_pairs", "q_simhash_pairs")
-    )
     dedup_sec = sum(
         timings[k]
         for k in (
             "q_fingerprint",
             "q_exact_dedup",
-            *pair_keys,
+            "q_dup_pairs",
             "q_connected_components",
         )
     )
@@ -269,7 +239,6 @@ def main() -> None:
                 # (the 8-19s run-to-run swing the round-2 judge flagged)
                 # from real propagation work in cross-run comparisons.
                 "cc_probes": cc_probes,
-                "fused_pairs": fuse_pairs,
                 # self-stamp: the analysis journal cites bench numbers by
                 # code version (judge r3 "what's wrong" #1) — the scaling
                 # legs' _meta carries the same sha (scaling_run overwrites

@@ -27,10 +27,10 @@ cluster localCheckpoint blocks are lost with an executor.
 
 from __future__ import annotations
 
-import os
 import time
 
 import pandas as pd
+from py4j.protocol import Py4JError, Py4JJavaError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -46,70 +46,64 @@ from image_dedup_spark.config import DEFAULT, DedupConfig
 _FRONTIER_STREAK_MAX = 3
 
 
-def _reset_stats(df: DataFrame) -> DataFrame:
-    """Rebuild `df` over its SAME internal RDD but with fresh (default)
-    statistics — zero-copy, no job.
-
-    Dataset.checkpoint/localCheckpoint preserve the origin plan's
-    sizeInBytes estimate in the truncated LogicalRDD. In an iterative
-    loop whose round plan joins the previous checkpoint several times,
-    those estimates COMPOUND multiplicatively round over round (join
-    stats are the product of child sizes), so the BigInt grows ~5x in
-    BIT LENGTH per round: by round 7 Catalyst's stats visitor
-    (join-size checks, runtime-filter injection) was multiplying
-    multi-million-bit integers and a 200-vertex toy graph hung for
-    minutes inside BigInteger.multiplyToomCook3 (measured, round-4
-    debug). The default Long.MaxValue stat is constant-size and
-    decision-equivalent here: the compounded products were garbage
-    upper bounds no broadcast threshold could pass anyway, and every
-    small-side broadcast in the loop is either explicit
-    (``F.broadcast``) or made by AQE from RUNTIME shuffle sizes."""
-    spark = df.sparkSession
-    jdf = df._jdf
-    new_jdf = spark._jsparkSession.internalCreateDataFrame(
-        jdf.queryExecution().toRdd(), jdf.schema(), False
-    )
-    return DataFrame(new_jdf, spark)
-
-
 def _truncate_lineage(df: DataFrame, lazy_ok: bool = False) -> DataFrame:
-    """Reliable checkpoint when the context has a checkpoint dir (fault
-    tolerant on a cluster), localCheckpoint otherwise (local mode) —
-    followed by a stats reset (see :func:`_reset_stats`).
+    """Cut `df`'s lineage and give the result fresh (default) statistics.
 
-    ``lazy_ok``: local-mode callers that immediately run an aggregation
-    over the result pass True — the lazy localCheckpoint then
-    materializes its blocks as a side effect of that SAME job, fusing
-    what used to be two driver barriers (checkpoint job + probe job)
-    into one. The reliable-checkpoint path stays eager: an RDD marked
-    for reliable checkpointing is recomputed by the checkpoint writer
-    after the first action, so laziness would double-compute there."""
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is not None:
-        return _reset_stats(df.checkpoint(eager=True))
-    return _reset_stats(df.localCheckpoint(eager=not lazy_ok))
+    Reliable ``checkpoint()`` when the context has a checkpoint dir (fault
+    tolerant on a cluster: localCheckpoint blocks are lost with an
+    executor), ``localCheckpoint`` otherwise. ``lazy_ok``: local-mode
+    callers that immediately run an aggregation over the result pass
+    True — the lazy localCheckpoint then materializes its blocks as a side
+    effect of that SAME job, one driver barrier instead of two. The
+    reliable path stays eager: an RDD marked for reliable checkpointing is
+    recomputed by the checkpoint writer after the first action, so
+    laziness would double-compute there.
+
+    Stats reset: Dataset.checkpoint/localCheckpoint keep the origin plan's
+    sizeInBytes estimate in the truncated LogicalRDD. In a loop whose
+    round plan joins the previous checkpoint several times those estimates
+    COMPOUND round over round (join stats are the product of child sizes),
+    growing the BigInt ~5x in bit length per round, until Catalyst's stats
+    visitor spends minutes in BigInteger.multiplyToomCook3 on a 200-vertex
+    graph. Re-wrapping the SAME internal RDD (zero-copy, no job) resets
+    the stat to the constant-size default, which is decision-equivalent:
+    every small-side broadcast in the loop is either explicit
+    (``F.broadcast``) or made by AQE from runtime shuffle sizes."""
+    spark = df.sparkSession
+    if spark.sparkContext.getCheckpointDir() is not None:
+        df = df.checkpoint(eager=True)
+    else:
+        df = df.localCheckpoint(eager=not lazy_ok)
+    jdf = df._jdf
+    rdd, schema = jdf.queryExecution().toRdd(), jdf.schema()
+    try:
+        new_jdf = spark._jsparkSession.internalCreateDataFrame(rdd, schema, False)
+    except Py4JJavaError:
+        raise
+    except (AttributeError, Py4JError) as exc:
+        raise RuntimeError(
+            "SparkSession.internalCreateDataFrame is missing from this Spark "
+            "build; connected_components needs it to reset checkpoint "
+            "statistics, without which join-size estimates compound every "
+            "round and the label loop stalls in BigInteger multiplication"
+        ) from exc
+    return DataFrame(new_jdf, spark)
 
 
 def connected_components(
     edges: DataFrame,
     cfg: DedupConfig = DEFAULT,
-    src: str = "src_id",
-    dst: str = "dst_id",
-    dedup_edges: bool = False,
     metrics_out: list | None = None,
 ) -> DataFrame:
-    """(doc_id, cluster_id) for every vertex appearing in `edges`.
-    cluster_id = min doc_id in the component.
+    """(doc_id, cluster_id) for every vertex appearing in `edges`
+    (``src_id``/``dst_id`` columns). cluster_id = min doc_id in the
+    component; both columns keep the input id type.
 
-    ``dedup_edges`` is off by default: min-label propagation is
-    idempotent to duplicate edges (a repeated (a,b) only re-offers the
-    same min candidate to the same groupBy), so the distinct's full
-    shuffle+dedup of the symmetrized edge table only pays for itself
-    when the pair families overlap heavily; the engine's stages emit
-    distinct pairs each, so overlap is the rare doc caught by two
-    families.
+    Duplicate edges are not removed: min-label propagation is idempotent
+    to them (a repeated (a,b) only re-offers the same min candidate to
+    the same groupBy), and the engine's pair stages emit distinct pairs.
 
-    Round structure (the round-4 change): every round carries a
+    Round structure: every round carries a
     ``changed`` flag computed inside the round's own aggregation
     (executor-side change detection — no cross-round sum diffing), and
     once a round changes <= ``cfg.cc_frontier_max`` labels the loop
@@ -127,9 +121,10 @@ def connected_components(
     round into a map-side pass.
 
     ``metrics_out``: optional list that receives one dict per probe
-    barrier {"iteration", "seconds", "label_sum", "changed",
-    "converged", "mode"} — the bench uses it to separate real
-    propagation work from barrier latency when comparing runs."""
+    barrier {"iteration", "seconds", "round_wall", "label_sum",
+    "changed", "converged", "mode"}, plus "ckpt_wall" on full and
+    frontier rounds — the bench uses it to separate real propagation
+    work from barrier latency when comparing runs."""
     # Pin the symmetrized edge table: every probe is its own Spark job,
     # and an unpinned `e` would replay the union shuffle each round
     # (shuffle reuse does not cross job boundaries). Lazy in local mode:
@@ -137,10 +132,13 @@ def connected_components(
     # effect, so edge pinning + label init + first probe are ONE job
     # submission instead of three (the ~9s/stage fixed floor measured in
     # BENCH/ANALYSIS_r2.md was mostly these serial barriers).
-    sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionByName(
-        edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
+    e = _truncate_lineage(
+        edges.select(F.col("src_id").alias("a"), F.col("dst_id").alias("b"))
+        .unionByName(
+            edges.select(F.col("dst_id").alias("a"), F.col("src_id").alias("b"))
+        ),
+        lazy_ok=True,
     )
-    e = _truncate_lineage(sym.distinct() if dedup_edges else sym, lazy_ok=True)
     # Warm start: label(v) = min(v, min neighbor) — the result round 1
     # would produce, folded into the same shuffle the old doc_id-distinct
     # init already paid. Dup-pair graphs are shallow (exact-dup stars,
@@ -159,7 +157,6 @@ def connected_components(
         lazy_ok=True,
     )
 
-    id_bounds: list = []
     wall_anchor = [time.monotonic()]
 
     def probe(lab: DataFrame, it: int, mode: str) -> tuple[int, int]:
@@ -168,21 +165,14 @@ def connected_components(
         test) plus total vertices (the frontier-fraction gate). The
         label sum (decimal(38,0), immune to 64-bit wrap on hash-derived
         ids) is kept in the metrics as a cross-run fingerprint of the
-        labelling itself. The warm probe additionally rides the vertex
-        id bounds (for the int32 narrowing decision below) on the same
-        aggregation — no extra job."""
+        labelling itself."""
         t0 = time.monotonic()
-        aggs = [
+        row = lab.agg(
             F.sum(F.col("changed").cast("long")),
             F.count(F.lit(1)),
             F.sum(F.col("cluster_id").cast("decimal(38,0)")),
-        ]
-        if it == -1:
-            aggs += [F.min("doc_id"), F.max("doc_id")]
-        row = lab.agg(*aggs).first()
+        ).first()
         n_changed = int(row[0] or 0)
-        if it == -1:
-            id_bounds[:] = [row[3], row[4]]
         if metrics_out is not None:
             metrics_out.append(
                 {
@@ -202,46 +192,6 @@ def connected_components(
         return n_changed, int(row[1] or 0)
 
     n_changed, n_vertices = probe(labels, -1, "warm")
-    # Narrow the loop's working set to int32 when every vertex id fits
-    # (doc_id <= cluster_id bounds: labels are mins of ids). The edge
-    # and label tables are re-materialized/probed every round, so at a
-    # 2-core vs 8-core pinning the loop's per-core DRAM share is the
-    # scaling bound — halving bytes per row halves the traffic both
-    # legs move. One extra pass re-pins the edge table narrow; the
-    # label cast fuses into the next round's plan. Ids outside int32
-    # (hash-derived or 10^12-scale corpora) keep the 64-bit path; the
-    # output is cast back to the input id type either way.
-    out_type = dict(edges.dtypes)[src]
-    narrowed = (
-        os.environ.get("SPARK_GRAFT_CC_NARROW", "1") == "1"
-        and n_changed > 0  # a converged warm start never re-reads the tables
-        and id_bounds[0] is not None
-        and -(2**31) <= int(id_bounds[0])
-        and int(id_bounds[1]) < 2**31
-        and out_type in ("bigint", "int")
-    )
-    if narrowed:
-        t0 = time.monotonic()
-        e = _truncate_lineage(
-            e.select(F.col("a").cast("int"), F.col("b").cast("int"))
-        )
-        e.count()  # eager: the repin cost lands in this metric, not a round's
-        labels = labels.select(
-            F.col("doc_id").cast("int"),
-            F.col("cluster_id").cast("int"),
-            "changed",
-        )
-        if metrics_out is not None:
-            metrics_out.append(
-                {
-                    "iteration": -1,
-                    "seconds": round(time.monotonic() - t0, 3),
-                    "label_sum": None,
-                    "changed": n_changed,
-                    "converged": False,
-                    "mode": "narrow_repin",
-                }
-            )
     streak = 0
     for it in range(cfg.cc_max_iterations):
         if n_changed == 0:
@@ -396,10 +346,24 @@ def connected_components(
         n_changed, n_vertices = probe(labels, it, mode)
         if metrics_out is not None:
             metrics_out[-1]["ckpt_wall"] = ckpt_wall
-    return labels.select(
-        F.col("doc_id").cast(out_type).alias("doc_id"),
-        F.col("cluster_id").cast(out_type).alias("cluster_id"),
-    )
+    return labels.select("doc_id", "cluster_id")
+
+
+def _moved(comp: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """The rows of a :func:`connected_components` table whose cluster_id
+    differs from doc_id — the only rows an assign join needs, since a
+    vertex that IS its component min (or a doc outside the graph)
+    coalesces to its own id either way.
+
+    The subset is counted (comp is pinned by the CC loop, so the count is
+    a cheap scan) and broadcast when it has at most
+    ``cfg.assign_bcast_max`` rows, keeping the corpus-sized probe side
+    map-side. Past the cap the join degrades to a shuffle join instead
+    of failing on an oversized build side."""
+    moved = comp.filter(F.col("cluster_id") != F.col("doc_id"))
+    if moved.count() <= cfg.assign_bcast_max:
+        moved = F.broadcast(moved)
+    return moved
 
 
 def assign_clusters(
@@ -408,24 +372,10 @@ def assign_clusters(
     metrics_out: list | None = None,
 ) -> DataFrame:
     """Every doc gets a cluster_id (its own id when untouched by any edge)
-    and is_representative (deterministic min-doc_id rule).
-
-    Join strategy: docs only need the comp rows whose cluster_id
-    differs from the vertex id — vertices that ARE their component min
-    (and docs outside the graph) coalesce to their own id either way.
-    That "moved" subset is counted (comp is pinned by the CC loop, so
-    the count is a cheap scan) and broadcast when it fits
-    (``cfg.assign_bcast_max``), keeping the corpus-sized docs scan
-    map-side instead of shuffling it on the join key."""
+    and is_representative (deterministic min-doc_id rule). Docs join
+    only the moved component rows (:func:`_moved`)."""
     comp = connected_components(edges, cfg, metrics_out=metrics_out)
-    moved = comp.filter(F.col("cluster_id") != F.col("doc_id")).withColumnRenamed(
-        "doc_id", id_col
-    )
-    if (
-        os.environ.get("SPARK_GRAFT_ASSIGN_BCAST", "1") == "1"
-        and moved.count() <= cfg.assign_bcast_max
-    ):
-        moved = F.broadcast(moved)
+    moved = _moved(comp, cfg).withColumnRenamed("doc_id", id_col)
     return (
         docs.join(moved, id_col, "left")
         .withColumn("cluster_id", F.coalesce("cluster_id", F.col(id_col)))
@@ -463,11 +413,11 @@ def assign_clusters_via_labels(
     Why it scales: connected_components runs on the near graph alone
     (vertices = keepers with at least one verified near edge), typically
     orders of magnitude smaller than the corpus; the full corpus pays
-    ONE join against that small component table (AQE broadcasts it when
-    it fits) instead of riding every propagation round. Measured at 1M
-    docs / pinned 8 cores: the CC stage's label loop drops from 22.7s
-    (5 probe barriers over 1M-vertex label tables) to the near-graph
-    loop over ~100k vertices (BENCH/ANALYSIS_r4.md §8).
+    ONE join against that small component table (broadcast when it
+    fits, :func:`_moved`) instead of riding every propagation round.
+    Measured at 1M docs / pinned 8 cores: the CC stage's label loop
+    drops from 22.7s (5 probe barriers over 1M-vertex label tables) to
+    the near-graph loop over ~100k vertices (BENCH/ANALYSIS_r4.md §8).
 
     ``docs=None``: when the caller needs no extra doc columns and the
     labels table was built over the SAME rows (always true for
@@ -476,21 +426,14 @@ def assign_clusters_via_labels(
     docs-join-back (a full sort-merge join that only re-discovers rows
     the labels table already enumerates) is skipped entirely."""
     comp = connected_components(near_edges, cfg, metrics_out=metrics_out)
-    # Only keepers whose component min DIFFERS from themselves matter:
-    # a quiescent keeper (or one outside the near graph) coalesces to
-    # itself. The moved subset is counted off comp's pinned blocks and
-    # broadcast when it fits (cfg.assign_bcast_max) so the corpus-sized
-    # labels table is never shuffled on the join key — the assign step
-    # becomes one map-side pass (this join was the worst-scaling piece
-    # of the CC stage: a 5M x ~3M shuffle join at bench scale).
-    comp_k = comp.filter(F.col("cluster_id") != F.col("doc_id")).select(
+    # Only keepers whose component min DIFFERS from themselves matter,
+    # broadcast when they fit so the corpus-sized labels table is never
+    # shuffled on the join key — the assign step becomes one map-side
+    # pass (this join was the worst-scaling piece of the CC stage: a
+    # 5M x ~3M shuffle join at bench scale).
+    comp_k = _moved(comp, cfg).select(
         F.col("doc_id").alias("keeper"), F.col("cluster_id").alias("_comp_min")
     )
-    if (
-        os.environ.get("SPARK_GRAFT_ASSIGN_BCAST", "1") == "1"
-        and comp_k.count() <= cfg.assign_bcast_max
-    ):
-        comp_k = F.broadcast(comp_k)
     lab = (
         labels.select(F.col(id_col), "keeper")
         .join(comp_k, "keeper", "left")

@@ -142,11 +142,11 @@ def latest_capture(
     maps) cannot ride in the packed struct — Spark's analyzer rejects
     ``max`` over them. Those columns are carried around the aggregate
     instead: winners are picked from the orderable columns, then the
-    unorderable ones are joined back by the winner's unique ``doc_id``.
-    The join-back ships only ``doc_id`` plus the map columns and joins
-    a winner-sized table against the corpus on a unique key — still no
-    window sort, and the common all-orderable schema path is unchanged
-    (zero joins).
+    unorderable ones are joined back by the winner's ``doc_id``.
+    The join-back ships only ``doc_id`` plus the map columns, deduped on
+    ``doc_id`` so a duplicated id cannot multiply winner rows (one of
+    its rows' carried values is taken) — still no window sort, and the
+    common all-orderable schema path is unchanged (zero joins).
     """
     cols = pages.columns
     if key_col not in cols or ts_col not in cols:
@@ -169,7 +169,8 @@ def latest_capture(
         *[F.col(f"_w.{c}").alias(c) for c in packable],
     )
     if carried:
-        out = out.join(pages.select("doc_id", *carried), on="doc_id", how="inner")
+        back = pages.select("doc_id", *carried).dropDuplicates(["doc_id"])
+        out = out.join(back, on="doc_id", how="inner")
     return out.select(*cols)  # original column order
 
 

@@ -119,12 +119,6 @@ def run_bench(
         SPARK_GRAFT_CPUS=str(cores),
         SPARK_GRAFT_BENCH_EXPANSION=str(expansion),
         SPARK_GRAFT_SF_DIR=sf_dir,
-        # Scaling legs fuse the two near-dup pair families into ONE job
-        # (bench.py q_dup_pairs): a shared fingerprint scan and a single
-        # job submission halve the per-stage fixed floor (~9s/stage,
-        # BENCH/ANALYSIS_r2.md) that capped round-2 efficiency. The
-        # driver's unfused bench still reports the families separately.
-        SPARK_GRAFT_FUSE_PAIRS=os.environ.get("SPARK_GRAFT_FUSE_PAIRS", "1"),
     )
     submit = _spark_submit()
     # Memory scales with cores (the real-cluster analog: same executor
@@ -272,8 +266,6 @@ def write_report(
         "q_exact_dedup": "exact dedup",
         "q_fingerprint": "fingerprint (Arrow UDF)",
         "q_dup_pairs": "near-dup pairs (minhash+simhash, one fused job)",
-        "q_minhash_lsh_pairs": "minhash LSH pairs",
-        "q_simhash_pairs": "simhash pairs",
         "q_connected_components": "connected components",
     }
     stage_rows = []

@@ -4,6 +4,7 @@
 import random
 
 import pyspark.sql.functions as F
+import pytest
 
 from image_dedup_spark.operators import components as CC
 
@@ -177,6 +178,9 @@ def test_frontier_rounds_used_and_correct(spark):
     )
     modes = [p["mode"] for p in probes]
     assert "frontier" in modes, modes
+    # the probe fields perfbench/run.py reads for its components counters
+    assert set(modes) <= {"warm", "full", "frontier"}, modes
+    assert all("ckpt_wall" in p for p in probes if p["mode"] != "warm"), probes
     # chain collapses to one cluster labeled 0; every pair keeps its min
     got = {r.doc_id: r.cluster_id for r in out.filter("doc_id <= 12").collect()}
     assert got == {i: 0 for i in range(13)}
@@ -259,30 +263,47 @@ def test_assign_via_labels_docs_none_matches_docs_join(spark):
 
 
 def test_cc_ids_beyond_int32_stay_64bit_and_correct(spark):
-    """The int32 loop-narrowing must not engage when any vertex id is
-    outside int32 (hash-derived / 10^12-scale ids); labels stay exact
+    """Ids outside int32 (hash-derived / 10^12-scale) keep exact labels,
     and the output keeps the input id type."""
     big = 3_000_000_000  # > 2^31 - 1
     edges = [(big + 1, big + 2), (big + 2, big + 3), (5, 6), (big + 10, 7)]
     df = spark.createDataFrame(edges, "src_id long, dst_id long")
-    got = {
-        r["doc_id"]: r["cluster_id"]
-        for r in CC.connected_components(df).collect()
-    }
-    assert got == {
+    out = CC.connected_components(df)
+    assert dict(out.dtypes) == {"doc_id": "bigint", "cluster_id": "bigint"}
+    assert {r["doc_id"]: r["cluster_id"] for r in out.collect()} == {
         big + 1: big + 1, big + 2: big + 1, big + 3: big + 1,
         5: 5, 6: 5, big + 10: 7, 7: 7,
     }
-    out = CC.connected_components(df)
-    assert dict(out.dtypes) == {"doc_id": "bigint", "cluster_id": "bigint"}
 
 
 def test_cc_output_type_matches_input_even_when_narrowed(spark):
-    """Small ids take the int32 loop internally but the contract type
-    (input id type) is restored at the boundary."""
+    """Small ids (which fit int32) still come back in the contract type,
+    the input id type."""
     df = spark.createDataFrame([(1, 2), (2, 3)], "src_id long, dst_id long")
     out = CC.connected_components(df)
     assert dict(out.dtypes) == {"doc_id": "bigint", "cluster_id": "bigint"}
     assert {r["doc_id"]: r["cluster_id"] for r in out.collect()} == {
         1: 1, 2: 1, 3: 1
     }
+
+
+def test_stats_reset_fails_fast_without_internal_create_dataframe(
+    spark, monkeypatch
+):
+    """The checkpoint stats reset depends on a private JVM method; if a
+    Spark build drops it, the CC loop must refuse with an error naming
+    the stats-compounding bug rather than fail obscurely (or hang)."""
+    df = spark.createDataFrame([(1, 2)], "src_id long, dst_id long")
+    real = spark._jsparkSession
+
+    class Drifted:
+        # a py4j call to a method the JVM does not have — the real
+        # failure mode of API drift ("Method ... does not exist")
+        internalCreateDataFrame = real.internalCreateDataFrameRemoved
+
+        def __getattr__(self, name):
+            return getattr(real, name)
+
+    monkeypatch.setattr(spark, "_jsparkSession", Drifted())
+    with pytest.raises(RuntimeError, match="internalCreateDataFrame.*compound"):
+        CC.connected_components(df).collect()

@@ -1,13 +1,12 @@
-"""Fused ≡ unfused near-dup pair parity.
+"""Fused ≡ separate near-dup pair parity.
 
-The scaling legs run both near-dup families (MinHash/LSH + SimHash) in
-ONE Spark action over a shared fingerprint scan and a SHARED CacheScope
-(bench.py q_dup_pairs, SPARK_GRAFT_FUSE_PAIRS=1), while the driver's
-unfused bench and the oracle-checked queries() entries materialize each
-family separately. The fusion must be a pure job-submission
+bench.py runs both near-dup families (MinHash/LSH + SimHash) in ONE
+Spark action over a shared fingerprint scan and a SHARED CacheScope
+(q_dup_pairs), while the oracle-checked queries() entries materialize
+each family separately. The fusion must be a pure job-submission
 optimization: the emitted pair SET has to be exactly the union of the
-two families' sets, or the scaling evidence would measure a different
-computation than the one the oracles verify.
+two families' sets, or the bench would measure a different computation
+than the one the oracles verify.
 """
 
 import pyspark.sql.functions as F
@@ -26,9 +25,8 @@ def _pairset(df):
 def test_fused_pair_job_equals_union_of_families(spark, fingerprints):
     fp = EX.survivors(fingerprints).cache()
 
-    # unfused: each family is its own action with its own scope —
-    # exactly the shape of bench.py's q_minhash_lsh_pairs /
-    # q_simhash_pairs and of the driver's oracle queries.
+    # separate: each family is its own action with its own scope —
+    # exactly the shape of the driver's oracle queries.
     with CacheScope() as scope:
         mh = _pairset(
             LSH.minhash_dup_pairs(fp, DEFAULT, mode="estimate", scope=scope)
@@ -54,7 +52,7 @@ def test_fused_pair_job_equals_union_of_families(spark, fingerprints):
     assert fused == mh | sh
 
     # the fused edge set clusters identically (n_clusters is the
-    # scaling legs' cross-leg output invariant)
+    # bench's cross-run output invariant)
     from image_dedup_spark.operators import components as CC
 
     edges_fused = spark.createDataFrame(

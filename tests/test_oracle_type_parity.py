@@ -129,9 +129,18 @@ def test_oracle_type_parity(spark, duck, name, sql):
     )
 
 
+# queries() entries deliberately checked by rows only (no DuckDB oracle).
+# Adding a query without an oracle means adding it here, on purpose.
+ROWS_ONLY: frozenset[str] = frozenset()
+
+
 def test_every_query_has_oracle_or_is_declared():
-    """Every queries() entry either has an oracle or is a deliberate
+    """Every queries() entry either has an oracle or is a declared
     rows-only query. Keeps the oracle surface from silently shrinking."""
     qs = set(entrymod.queries())
     orc = set(entrymod.oracle_sql())
     assert orc <= qs, f"oracles without queries: {sorted(orc - qs)}"
+    assert qs - orc == ROWS_ONLY, (
+        f"undeclared rows-only queries: {sorted(qs - orc - ROWS_ONLY)}; "
+        f"declared but now oracle-checked or gone: {sorted(ROWS_ONLY - (qs - orc))}"
+    )

@@ -149,6 +149,27 @@ def test_latest_capture_with_map_column(spark):
     assert got == {"u1": (2, {"etag": "b"}, "y"), "u2": (3, {"etag": "c"}, "z")}
 
 
+def test_latest_capture_map_column_duplicate_doc_ids(spark):
+    """Duplicated doc_ids (a re-ingested capture, a bad merge) must not
+    multiply rows through the map column's doc_id join-back: still
+    exactly one row per key."""
+    df = spark.createDataFrame(
+        [
+            (1, "u1", 100, {"etag": "a"}),
+            (1, "u1", 100, {"etag": "a2"}),
+            (2, "u1", 300, {"etag": "b"}),
+            (2, "u2", 50, {"etag": "b2"}),
+            (3, "u2", 40, {"etag": "c"}),
+        ],
+        "doc_id long, url string, warc_ts long, headers map<string,string>",
+    )
+    rows = WC.latest_capture(df, key_col="url", ts_col="warc_ts").collect()
+    assert sorted(r["url"] for r in rows) == ["u1", "u2"]
+    got = {r["url"]: (r["doc_id"], r["warc_ts"]) for r in rows}
+    assert got == {"u1": (2, 300), "u2": (2, 50)}
+    assert all(r["headers"]["etag"] in ("b", "b2") for r in rows)
+
+
 def test_latest_capture_rejects_unorderable_key(spark):
     df = spark.createDataFrame(
         [(1, {"k": "v"}, 10)], "doc_id long, key map<string,string>, ts long"
