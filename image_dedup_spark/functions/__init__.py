@@ -1,14 +1,8 @@
 from image_dedup_spark.functions import hashing, text
-from image_dedup_spark.functions.fingerprints import (
-    make_fingerprint_udf,
-    minhash_signature_batch,
-    simhash_batch,
-)
+from image_dedup_spark.functions.fingerprints import make_fingerprint_udf
 
 __all__ = [
     "hashing",
     "text",
     "make_fingerprint_udf",
-    "minhash_signature_batch",
-    "simhash_batch",
 ]

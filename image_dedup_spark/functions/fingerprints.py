@@ -32,6 +32,7 @@ import pyspark.sql.types as T
 from pyspark.sql import functions as F
 
 from image_dedup_spark.config import DEFAULT, DedupConfig
+from image_dedup_spark.session import drop_zip_finders
 
 _U64 = np.uint64
 
@@ -176,36 +177,6 @@ def _fingerprint_core(
     return minhash, words
 
 
-def minhash_signature_batch(
-    texts: pd.Series, cfg: DedupConfig = DEFAULT
-) -> list[np.ndarray]:
-    a, b = _permutation_params(cfg.num_hashes, cfg.minhash_seed)
-    offs = _stream_offsets(cfg.simhash_bits // 64, cfg.simhash_seed)
-    shifts = np.arange(64, dtype=_U64)
-    out = []
-    with np.errstate(over="ignore"):
-        for t in texts:
-            u = shingle_hashes(t or "", cfg)
-            out.append(
-                _fingerprint_core(u, a, b, offs, shifts, cfg.minhash_bits)[0]
-            )
-    return out
-
-
-def simhash_batch(texts: pd.Series, cfg: DedupConfig = DEFAULT) -> list[np.ndarray]:
-    a, b = _permutation_params(cfg.num_hashes, cfg.minhash_seed)
-    offs = _stream_offsets(cfg.simhash_bits // 64, cfg.simhash_seed)
-    shifts = np.arange(64, dtype=_U64)
-    out = []
-    with np.errstate(over="ignore"):
-        for t in texts:
-            u = shingle_hashes(t or "", cfg)
-            out.append(
-                _fingerprint_core(u, a, b, offs, shifts, cfg.minhash_bits)[1]
-            )
-    return out
-
-
 _EMPTY_I64 = np.empty(0, dtype=np.int64)
 
 
@@ -223,6 +194,7 @@ def make_fingerprint_udf(cfg: DedupConfig = DEFAULT, store_sketch: bool = True):
     """
 
     def _compute(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         a, b = _permutation_params(cfg.num_hashes, cfg.minhash_seed)
         n_words = cfg.simhash_bits // 64
         offs = _stream_offsets(n_words, cfg.simhash_seed)

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from image_dedup_spark.config import DEFAULT, DedupConfig
+from image_dedup_spark.session import drop_zip_finders
 
 # Frontier rounds move labels one edge-hop (plus a changed-rows-only
 # pointer jump) per round — O(diameter) on chain-shaped graphs, where
@@ -465,6 +466,7 @@ def _greedy_remove(pdf: pd.DataFrame) -> pd.DataFrame:
     (/root/reference/samples.cpp:552-574) with DETERMINISTIC tie-break:
     highest remaining degree, then smallest doc_id (the reference's tie
     order is unordered_map iteration order — unreproducible, SURVEY §7)."""
+    drop_zip_finders()
     adj: dict[int, set[int]] = {}
     for s, d in zip(pdf["src_id"], pdf["dst_id"]):
         adj.setdefault(int(s), set()).add(int(d))

@@ -50,6 +50,8 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from image_dedup_spark.session import drop_zip_finders
+
 EXTRACT_SCHEMA = T.StructType(
     [
         T.StructField("text", T.StringType(), True),
@@ -106,6 +108,7 @@ def make_extract_udf():
     (byte-identical extracted text per url) holds by construction."""
 
     def _extract(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for payloads in it:
             texts, errors, warnings = [], [], []
             for b in payloads:

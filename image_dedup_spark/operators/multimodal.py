@@ -30,6 +30,8 @@ import pandas as pd
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
+from image_dedup_spark.session import drop_zip_finders
+
 BINARY_META_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),
@@ -72,6 +74,7 @@ def binary_meta(
     oracle, which ships md5 but no sha1."""
 
     def _meta(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in it:
             payloads = pdf[bin_col]
             yield pd.DataFrame(
@@ -126,6 +129,7 @@ def decode_payload_batch(
     have = _have_decoder()
 
     def _decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in it:
             rows = []
             for did, b in zip(pdf[id_col], pdf[bin_col]):

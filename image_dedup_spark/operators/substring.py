@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from image_dedup_spark.config import DEFAULT, DedupConfig
 from image_dedup_spark.functions.fingerprints import splitmix64
+from image_dedup_spark.session import drop_zip_finders
 
 _U64 = np.uint64
 
@@ -81,6 +82,7 @@ def cdc_chunks(text: str, cfg: DedupConfig = DEFAULT) -> list[tuple[int, int, in
 
 def make_cdc_udf(cfg: DedupConfig = DEFAULT):
     def _compute(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        drop_zip_finders()
         for texts in it:
             yield pd.Series([cdc_chunks(t or "", cfg) for t in texts])
 
@@ -162,6 +164,7 @@ def _group_suffix_spans(
     struct-max rule the caller uses to merge across groups). Cost is
     O(block_len x docs_in_block) per block, and only rows with
     lcp >= min_span are ever scanned."""
+    drop_zip_finders()
     pdf = pdf.drop_duplicates("doc_id")
     if len(pdf) < 2:
         return pd.DataFrame(

@@ -10,8 +10,30 @@ from __future__ import annotations
 
 import os
 import shutil
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
+
+
+def drop_zip_finders() -> None:
+    """Forget the cached ``zipimporter`` path finders of this process.
+
+    Call it first thing in every function that runs inside a Python
+    worker. A worker has ``pyspark.zip``, the py4j zip and the
+    ``spark-core`` jar on ``sys.path`` (plus the engine zip under
+    ``--py-files``), and pyspark calls ``importlib.invalidate_caches()``
+    at the start of every task. That makes every cached zipimporter
+    re-read its whole archive directory: one per package path inside
+    each zip, ~50 ms for the jar alone, 250-310 ms per task in total,
+    measured on CPython 3.11 with Spark 4.1. With the entries gone the
+    next task has nothing to re-read. An import that needs a zip again
+    rebuilds its finder from ``sys.path_hooks``, which reuses zipimport's
+    per-archive directory cache.
+    """
+    cache = sys.path_importer_cache
+    for path in [p for p, f in cache.items() if isinstance(f, zipimport.zipimporter)]:
+        cache.pop(path, None)
 
 
 def _pid_alive(pid: int) -> bool:

@@ -14,13 +14,14 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from image_dedup_spark.config import DEFAULT, DedupConfig
 from image_dedup_spark.functions.fingerprints import make_fingerprint_udf
 from image_dedup_spark.operators import crosscorpus as XC
 from image_dedup_spark.operators import exact as EX
+from image_dedup_spark.session import drop_zip_finders
 
 
 def incremental_exact_dedup_stream(
@@ -114,6 +115,7 @@ def first_seen_filter(stream: DataFrame, key_col: str = "exact_key") -> DataFram
     out_schema = stream.schema
 
     def fn(key, pdf_iter, state):
+        drop_zip_finders()
         if state.exists:
             return
         batch = pd.concat(list(pdf_iter), ignore_index=True)
@@ -140,7 +142,11 @@ def incremental_near_merge(
     """One micro-batch of the near-dup merge fold: fingerprint the batch,
     drop docs that exactly or nearly duplicate the accumulated corpus at
     ``acc_path``, append survivors. Returns rows appended. Used from
-    ``foreachBatch`` (or called directly as the batch fold step)."""
+    ``foreachBatch`` (or called directly as the batch fold step).
+
+    The count comes from the write job itself (``observe``): a separate
+    ``count()`` would run the whole near-remain plan and the exact-key
+    anti-join over the accumulated table a second time."""
     fp_udf = make_fingerprint_udf(cfg)
     batch_fp = batch.select(
         "doc_id", "url", "text", fp_udf(F.col("text")).alias("fp")
@@ -153,14 +159,14 @@ def incremental_near_merge(
         )
         # exact-key anti-join too (cheaper; run first in spirit — Catalyst
         # orders the scans; both are left_anti joins on the same table)
-        survivors = survivors.join(
+        out = survivors.join(
             acc.select(EX.exact_key(F.col("text")).alias("exact_key")).distinct(),
             EX.exact_key(survivors.text) == F.col("exact_key"),
             "left_anti",
         )
-        n = survivors.count()
-        survivors.write.mode("append").parquet(acc_path)
+        mode = "append"
     else:
-        n = batch_fp.count()
-        batch_fp.write.mode("overwrite").parquet(acc_path)
-    return n
+        out, mode = batch_fp, "overwrite"
+    rows = Observation()
+    out.observe(rows, F.count(F.lit(1)).alias("n")).write.mode(mode).parquet(acc_path)
+    return rows.get["n"]

@@ -6,12 +6,12 @@ import pandas as pd
 import pyspark.sql.functions as F
 import pytest
 
+from image_dedup_spark.config import DEFAULT
 from image_dedup_spark.functions import text as TXT
 from image_dedup_spark.functions.fingerprints import (
     exact_jaccard,
-    minhash_signature_batch,
+    make_fingerprint_udf,
     shingle_hashes,
-    simhash_batch,
 )
 from image_dedup_spark.functions.hashing import (
     duckdb_md5_hash64,
@@ -20,6 +20,11 @@ from image_dedup_spark.functions.hashing import (
     md5_hash64,
     popcount,
 )
+
+
+def _kernel(s: pd.Series, cfg=DEFAULT) -> pd.DataFrame:
+    """The fingerprint UDF's own Python function on one batch, no Spark."""
+    return pd.concat(make_fingerprint_udf(cfg).func(iter([s])), ignore_index=True)
 
 
 def _py_popcount(vals):
@@ -111,13 +116,14 @@ def test_fingerprints_deterministic_and_sane():
     t2 = t1.replace("lazy", "hazy")
     t3 = "entirely different words compose this other document " * 10
     s = pd.Series([t1, t2, t3])
-    mh1, mh2 = minhash_signature_batch(s), minhash_signature_batch(s)
+    fp = _kernel(s)
+    mh1, mh2 = fp["minhash"], _kernel(s)["minhash"]
     for a, b in zip(mh1, mh2):
         assert (a == b).all()
     # similar docs agree on most components; dissimilar on none
     assert (mh1[0] == mh1[1]).mean() > 0.5
     assert (mh1[0] == mh1[2]).mean() < 0.1
-    sh = simhash_batch(s)
+    sh = fp["simhash"]
     d12 = _py_popcount([int(x) ^ int(y) for x, y in zip(sh[0], sh[1])])
     d13 = _py_popcount([int(x) ^ int(y) for x, y in zip(sh[0], sh[2])])
     assert d12 < d13
@@ -132,12 +138,10 @@ def test_minhash_width_truncates_same_minima():
     (equality structure is preserved, only the storage narrows)."""
     from dataclasses import replace
 
-    from image_dedup_spark.config import DEFAULT
-
     t = "the quick brown fox jumps over the lazy dog " * 10
     s = pd.Series([t])
-    mh16 = minhash_signature_batch(s, replace(DEFAULT, minhash_bits=16))[0]
-    mh32 = minhash_signature_batch(s, replace(DEFAULT, minhash_bits=32))[0]
+    mh16 = _kernel(s, replace(DEFAULT, minhash_bits=16))["minhash"][0]
+    mh32 = _kernel(s, replace(DEFAULT, minhash_bits=32))["minhash"][0]
     assert mh16.dtype == np.int16 and mh32.dtype == np.int32
     assert (mh16 == (mh32.astype(np.uint32) >> 16).astype(np.int16)).all()
 

@@ -30,20 +30,35 @@ def test_streaming_exact_dedup(spark, tmp_path_factory):
 
 
 def test_incremental_near_merge_fold(spark, tmp_path_factory):
+    """Earlier copies win, and the returned count is exactly the number
+    of rows the batch added to the accumulated table — also when every
+    row is a duplicate or the batch is empty."""
     acc = str(tmp_path_factory.mktemp("acc") / "corpus")
+    schema = "doc_id long, url string, text string"
     base = "all work and no play makes jack a dull boy " * 10
-    b1 = spark.createDataFrame(
-        [(1, "u1", base)], "doc_id long, url string, text string"
-    )
+    fresh = "fresh new content never seen before " * 10
+    b1 = spark.createDataFrame([(1, "u1", base)], schema)
     b2 = spark.createDataFrame(
         [
             (2, "u2", base.replace("dull", "dulll")),  # near dup of 1
-            (3, "u3", "fresh new content never seen before " * 10),
+            (3, "u3", fresh),
+            (4, "u4", base),  # exact dup of 1
         ],
-        "doc_id long, url string, text string",
+        schema,
     )
-    assert incremental_near_merge(spark, b1, acc) == 1
-    assert incremental_near_merge(spark, b2, acc) == 1  # only doc 3 appended
+    b3 = spark.createDataFrame([(5, "u5", fresh), (6, "u6", base)], schema)
+    b4 = spark.createDataFrame([], schema)
+
+    def acc_rows():
+        return spark.read.parquet(acc).count()
+
+    assert incremental_near_merge(spark, b1, acc) == 1 == acc_rows()
+    returned = []
+    for b in (b2, b3, b4):
+        before = acc_rows()
+        returned.append(incremental_near_merge(spark, b, acc))
+        assert returned[-1] == acc_rows() - before
+    assert returned == [1, 0, 0]  # only doc 3 appended
     ids = sorted(r.doc_id for r in spark.read.parquet(acc).collect())
     assert ids == [1, 3]
 
