@@ -155,11 +155,6 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    # builder-time overrides from the environment (static confs like
-    # spark.shuffle.compress cannot be set post-startup): "k=v;k=v"
-    for kv in filter(None, os.environ.get("SPARK_GRAFT_CONF", "").split(";")):
-        k, _, v = kv.partition("=")
-        builder = builder.config(k.strip(), v.strip())
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

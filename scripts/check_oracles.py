@@ -7,10 +7,11 @@ the round-4 host_stats lesson; see tests/test_oracle_type_parity.py)."""
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
