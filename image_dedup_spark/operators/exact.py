@@ -25,13 +25,6 @@ def exact_key(col: Column) -> Column:
     return TXT.doc_fingerprint(col)
 
 
-def with_rank(
-    df: DataFrame, key: str = "exact_key", order: str = "doc_id"
-) -> DataFrame:
-    w = Window.partitionBy(key).orderBy(F.col(order).asc())
-    return df.withColumn("dup_rank", F.row_number().over(w))
-
-
 def _keepers(keyed: DataFrame, order: str) -> DataFrame:
     """(exact_key, min(order)) — the keep-first winners. A groupBy/min is
     map-side combinable, so only slim (key, id) pairs ever shuffle; the

@@ -1,14 +1,13 @@
 """Property tests: connected_components vs a pure union-find oracle.
 
 The CC loop has the engine's trickiest control flow (warm start,
-executor-side change counts, frontier/full mode switching, streak
-caps, map-side merge-backs, per-round pointer jumping) — fixed-shape
-tests pin the known regimes, hypothesis sweeps the graph space for
-shapes nobody thought to pin: duplicate edges, self-loops, chains that
-trip the frontier streak cap, components that merge late. Every
-example is checked under BOTH a frontier-forced config and a
-frontier-disabled config, so the two physical paths can never diverge
-semantically without a counterexample landing here.
+executor-side change counts, changed-source offers, per-round pointer
+jumping) — fixed-shape tests pin the known regimes, hypothesis sweeps
+the graph space for shapes nobody thought to pin: duplicate edges,
+self-loops, long chains, components that merge late. Every example is
+checked under BOTH a broadcast-always and a broadcast-never cap for the
+changed set, so the two physical shapes of the changed-set join can
+never diverge semantically without a counterexample landing here.
 """
 
 import pytest
@@ -20,12 +19,10 @@ from hypothesis import strategies as st
 from image_dedup_spark.config import DEFAULT
 from image_dedup_spark.operators import components as CC
 
-# Frontier at the first opportunity (any changed-count qualifies) vs
-# never (every round re-shuffles the full edge table).
-FRONTIER_ALWAYS = replace(
-    DEFAULT, cc_frontier_max=10**9, cc_frontier_frac_pct=100
-)
-FRONTIER_NEVER = replace(DEFAULT, cc_frontier_max=0)
+# The changed set broadcast into the edge table every round vs never
+# (every round shuffle-joins it with the edge table).
+BCAST_ALWAYS = replace(DEFAULT, cc_frontier_max=10**9)
+BCAST_NEVER = replace(DEFAULT, cc_frontier_max=0)
 
 
 def _oracle(edges):
@@ -49,9 +46,9 @@ def _oracle(edges):
     return sorted(out.items())
 
 
-def _run(spark, edges, cfg):
+def _run(spark, edges, cfg, metrics_out=None):
     df = spark.createDataFrame(edges, "src_id long, dst_id long")
-    got = CC.connected_components(df, cfg=cfg).collect()
+    got = CC.connected_components(df, cfg=cfg, metrics_out=metrics_out).collect()
     return sorted((r.doc_id, r.cluster_id) for r in got)
 
 
@@ -70,20 +67,24 @@ edge_lists = st.lists(
 @given(edges=edge_lists)
 def test_cc_matches_union_find_on_random_graphs(spark, edges):
     expect = _oracle(edges)
-    assert _run(spark, edges, FRONTIER_ALWAYS) == expect
-    assert _run(spark, edges, FRONTIER_NEVER) == expect
+    assert _run(spark, edges, BCAST_ALWAYS) == expect
+    assert _run(spark, edges, BCAST_NEVER) == expect
 
 
-def test_cc_long_chain_trips_streak_cap(spark):
-    """A path graph is min-label propagation's worst case: the label
-    walks one hop per plain round, and under FRONTIER_ALWAYS the
-    3-round frontier streak cap must interleave full rounds (with their
-    global pointer jump) to keep O(log n) — while staying correct."""
+def test_cc_long_chain_converges_in_log_rounds(spark):
+    """A path graph is min-label propagation's worst case: a neighbor
+    hop moves the min label one edge per round, so only the per-round
+    pointer jump keeps the loop at O(log n) rounds. The 64-vertex path
+    must converge in at most 8 loop rounds under both caps."""
     n = 64
     edges = [(i, i + 1) for i in range(n - 1)]
     expect = [(v, 0) for v in range(n)]
-    assert _run(spark, edges, FRONTIER_ALWAYS) == expect
-    assert _run(spark, edges, FRONTIER_NEVER) == expect
+    for cfg in (BCAST_ALWAYS, BCAST_NEVER):
+        probes = []
+        assert _run(spark, edges, cfg, probes) == expect
+        rounds = [p for p in probes if p["mode"] != "warm"]
+        assert len(rounds) <= 8, [p["changed"] for p in probes]
+        assert probes[-1]["converged"]
 
 
 def test_cc_self_loops_and_duplicates_only(spark):
@@ -100,5 +101,5 @@ def test_cc_late_merge_of_two_big_components(spark):
     b = [(i, j) for i in range(10, 16) for j in range(i + 1, 16)]
     edges = a + b + [(5, 10)]
     expect = [(v, 0) for v in list(range(6)) + list(range(10, 16))]
-    assert _run(spark, edges, FRONTIER_ALWAYS) == expect
-    assert _run(spark, edges, FRONTIER_NEVER) == expect
+    assert _run(spark, edges, BCAST_ALWAYS) == expect
+    assert _run(spark, edges, BCAST_NEVER) == expect
