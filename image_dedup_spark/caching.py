@@ -11,15 +11,15 @@ The contract here: operators never call ``.cache()`` directly — they
 accept an optional :class:`CacheScope` and register intermediates on
 it. The CALLER (who knows when the consuming action has finished)
 releases the scope, unpersisting everything it owns. Passing no scope
-means no caching at all — the shared subtree is recomputed, which is
-the right trade below ~1M rows where the subtree is cheap and the
-extra materialization pass costs more than it saves.
+means no caching at all — the shared subtree is recomputed per consumer
+(the measurement at the bottom of this module: the cache wins at every
+scale, so the pipeline always scopes).
 
 Usage::
 
     with CacheScope() as scope:
-        pairs = minhash_dup_pairs(fp, cfg, scope=scope)
-        out = pairs.localCheckpoint(eager=True)   # consuming action
+        out = IO.checkpoint(minhash_dup_pairs(fp, cfg, scope=scope))
+        IO.row_count(out)                      # consuming action
     # scope released: no InMemoryRelation outlives the block
 """
 

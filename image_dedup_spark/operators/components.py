@@ -17,13 +17,14 @@ pointer jump (large-star/small-star, Kiveris et al., SoCC 2014), so the
 round count is O(log n). The changed set is broadcast into the pinned
 edge table when the previous probe counted at most
 ``cfg.cc_frontier_max`` of them (see :func:`connected_components`).
-Lineage is truncated every round and the convergence probe (count of
-changed labels, computed inside the round's own aggregation) rides the
-same job. No driver-side graph materialization ever happens beyond the
-bounded changed-set broadcast. When the SparkContext has a checkpoint
-dir set (``sc.setCheckpointDir``), reliable ``checkpoint()`` is used
-instead of ``localCheckpoint`` — on a real cluster localCheckpoint
-blocks are lost with an executor.
+Lineage is truncated every round with the engine's one lineage cut,
+``sources.io.checkpoint`` (reliable ``checkpoint()`` when the
+SparkContext has a checkpoint dir, a lazy ``localCheckpoint``
+otherwise), plus a statistics reset (:func:`_truncate_lineage`); the
+convergence probe (count of changed labels, computed inside the round's
+own aggregation) rides the job that fills the lazy checkpoint. No
+driver-side graph materialization ever happens beyond the bounded
+changed-set broadcast.
 """
 
 from __future__ import annotations
@@ -37,20 +38,14 @@ from pyspark.sql import functions as F
 
 from image_dedup_spark.config import DEFAULT, DedupConfig
 from image_dedup_spark.session import drop_zip_finders
+from image_dedup_spark.sources import io as IO
 
 
 def _truncate_lineage(df: DataFrame) -> DataFrame:
-    """Cut `df`'s lineage and give the result fresh (default) statistics.
-
-    Reliable ``checkpoint()`` when the context has a checkpoint dir (fault
-    tolerant on a cluster: localCheckpoint blocks are lost with an
-    executor), ``localCheckpoint`` otherwise. The local checkpoint is
-    lazy: every caller runs an aggregation over the result right away,
-    which materializes the blocks as a side effect of that SAME job, one
-    driver barrier instead of two. The reliable path stays eager: an RDD
-    marked for reliable checkpointing is recomputed by the checkpoint
-    writer after the first action, so laziness would double-compute
-    there.
+    """Cut `df`'s lineage (:func:`sources.io.checkpoint`: reliable with a
+    checkpoint dir, lazy local otherwise — every caller here runs an
+    aggregation over the result right away, which fills the blocks in
+    that same job) and give the result fresh (default) statistics.
 
     Stats reset: Dataset.checkpoint/localCheckpoint keep the origin plan's
     sizeInBytes estimate in the truncated LogicalRDD. In a loop whose
@@ -61,12 +56,11 @@ def _truncate_lineage(df: DataFrame) -> DataFrame:
     graph. Re-wrapping the SAME internal RDD (zero-copy, no job) resets
     the stat to the constant-size default, which is decision-equivalent:
     every small-side broadcast in the loop is either explicit
-    (``F.broadcast``) or made by AQE from runtime shuffle sizes."""
+    (``F.broadcast``) or made by AQE from runtime shuffle sizes. Pipeline
+    stages keep their statistics (``IO.checkpoint`` alone): there the
+    estimates do not compound, and they drive static broadcasts."""
     spark = df.sparkSession
-    if spark.sparkContext.getCheckpointDir() is not None:
-        df = df.checkpoint(eager=True)
-    else:
-        df = df.localCheckpoint(eager=False)
+    df = IO.checkpoint(df)
     jdf = df._jdf
     rdd, schema = jdf.queryExecution().toRdd(), jdf.schema()
     try:

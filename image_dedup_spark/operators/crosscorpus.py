@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from image_dedup_spark.config import DEFAULT, DedupConfig
 from image_dedup_spark.functions.hashing import hamming
-from image_dedup_spark.operators.lsh import minhash_band_table
+from image_dedup_spark.operators.lsh import _sig_jaccard_estimate, minhash_band_table
 
 
 def exact_remain(src: DataFrame, gallery: DataFrame, key: str = "exact_key") -> DataFrame:
@@ -67,8 +67,7 @@ def near_dup_ids_vs_gallery(
     right = gallery_fp.select(
         F.col("doc_id").alias("gal_id"), F.col("minhash").alias("b_mh")
     )
-    eq = F.zip_with("a_mh", "b_mh", lambda x, y: (x == y).cast("int"))
-    est = F.aggregate(eq, F.lit(0), lambda a, x: a + x) / F.lit(cfg.num_hashes)
+    est = _sig_jaccard_estimate(F.col("a_mh"), F.col("b_mh"), cfg.num_hashes)
     verified = (
         cands.join(left, "src_id")
         .join(right, "gal_id")

@@ -90,10 +90,10 @@ def candidate_pairs(
     :func:`bucket_stats`.
 
     ``scope``: optional :class:`CacheScope` owning the shared
-    non-singleton band materialization. Without one, nothing is cached
-    — the band subtree is recomputed per consumer, which is cheaper
-    below ~500k docs and leak-free by construction; big-corpus callers
-    pass a scope and release it after their consuming action."""
+    non-singleton band materialization. The cache wins at every measured
+    scale (``caching.py``), so the pipeline always passes a scope and
+    releases it after the stage's consuming action. Without one, nothing
+    is cached and the band subtree is recomputed per consumer."""
     # Bucket sizing picks its physical shape by key-space cardinality
     # (both measured at 1M docs):
     #
@@ -382,9 +382,9 @@ def minhash_dup_pairs(
 ) -> DataFrame:
     """signature table -> verified duplicate-pair edges (D2+F4 analogue).
 
-    ``scope`` (big corpora only): owns the candidate-table cache; the
-    caller releases it after the consuming action — no InMemoryRelation
-    outlives the call site."""
+    ``scope``: owns the candidate-table cache (:func:`candidate_pairs`);
+    the caller releases it after the consuming action — no
+    InMemoryRelation outlives the call site."""
     bands = minhash_band_table(fingerprints, cfg)
     cands = candidate_pairs(bands, cfg, scope=scope)
     return verify_pairs(cands, fingerprints, cfg, mode=mode)

@@ -160,28 +160,25 @@ def run_pipeline(
     metrics: list[dict] = []
 
     def stage(name: str, build) -> DataFrame:
+        """Materialize one stage and record its metrics. Either way the
+        stage plan runs once: the checkpoint-dir path takes its lineage
+        record from the written files, and the in-memory path's lazy
+        checkpoint is filled by the one-job row count."""
         t0 = time.monotonic()
-        if IO.stage_exists(checkpoint_dir, name):
+        resumed = IO.stage_exists(checkpoint_dir, name)
+        if resumed:
             df = IO.read_stage(spark, checkpoint_dir, name)
-            metrics.append(
-                {"stage": name, "rows_out": df.count(),
-                 "seconds": time.monotonic() - t0, "resumed": True}
-            )
-            return df
-        df = build()
-        if checkpoint_dir:
-            IO.write_stage(df, checkpoint_dir, name)
+        elif checkpoint_dir:
+            IO.write_stage(build(), checkpoint_dir, name)
+            df = IO.read_stage(spark, checkpoint_dir, name)
             IO.write_stage(
                 IO.partition_lineage(df, name), checkpoint_dir, f"_lineage/{name}"
             )
-            df = IO.read_stage(spark, checkpoint_dir, name)
-            n = df.count()
         else:
-            df = df.localCheckpoint(eager=True)
-            n = df.count()
+            df = IO.checkpoint(build())
         metrics.append(
-            {"stage": name, "rows_out": n,
-             "seconds": time.monotonic() - t0, "resumed": False}
+            {"stage": name, "rows_out": IO.row_count(df),
+             "seconds": time.monotonic() - t0, "resumed": resumed}
         )
         return df
 

@@ -8,6 +8,10 @@ samples.cpp:379-425). Here each stage is a parquet directory (Iceberg
 would be a drop-in at deployment — the runtime here has no Iceberg jar,
 so parquet is the documented fallback) with an atomic ``_SUCCESS``
 marker; ``stage_exists`` gates resume.
+
+:func:`checkpoint` is the engine's only in-memory lineage cut (pipeline
+stages, connected-components rounds, merge batches), and
+:func:`row_count` is the one-job count that materializes it.
 """
 
 from __future__ import annotations
@@ -46,11 +50,40 @@ def read_pages(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Cut ``df``'s lineage.
+
+    Reliable eager ``checkpoint()`` when the context has a checkpoint dir
+    (``sc.setCheckpointDir``): on a cluster, localCheckpoint blocks are
+    lost with their executor. An RDD marked for reliable checkpointing is
+    recomputed by the checkpoint writer after its first action, so that
+    path stays eager. Otherwise a LAZY ``localCheckpoint``: the shuffle
+    stages under it run now, and the caller's next job (a
+    :func:`row_count`, or an aggregation over the result) computes the
+    final stage and persists its blocks in that same job — one driver
+    barrier instead of two. The origin plan's statistics are kept."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=False)
+
+
+def row_count(df: DataFrame) -> int:
+    """Rows of ``df`` in one Spark job: a count over the plan's RDD.
+    ``DataFrame.count()`` plans a global aggregation, which under AQE is
+    a shuffle-map job plus a result job."""
+    return df._jdf.queryExecution().toRdd().count()
+
+
 def partition_lineage(df: DataFrame, stage: str) -> DataFrame:
     """Per-partition row counts for the lineage record (north_rule:
-    per-partition lineage + metrics). Computed executor-side."""
+    per-partition lineage + metrics), for a stage read back from its
+    parquet directory: one row per part file, i.e. per writing task,
+    ``partition_id`` being the part file's task index. Reading the
+    written files (instead of re-running the stage plan) keeps the
+    stage's plan to one execution."""
+    part = F.regexp_extract(F.input_file_name(), r"/part-(\d+)[^/]*$", 1).cast("int")
     return (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
+        df.groupBy(part.alias("partition_id"))
         .count()
         .withColumn("stage", F.lit(stage))
     )

@@ -22,6 +22,7 @@ from image_dedup_spark.functions.fingerprints import make_fingerprint_udf
 from image_dedup_spark.operators import crosscorpus as XC
 from image_dedup_spark.operators import exact as EX
 from image_dedup_spark.session import drop_zip_finders
+from image_dedup_spark.sources import io as IO
 
 
 def incremental_exact_dedup_stream(
@@ -148,9 +149,13 @@ def incremental_near_merge(
     ``count()`` would run the whole near-remain plan and the exact-key
     anti-join over the accumulated table a second time."""
     fp_udf = make_fingerprint_udf(cfg)
-    batch_fp = batch.select(
-        "doc_id", "url", "text", fp_udf(F.col("text")).alias("fp")
-    ).select("doc_id", "url", "text", "fp.*").localCheckpoint(eager=True)
+    # The batch's one fingerprint pass, pinned now: both the near-remain
+    # probe and the append read it.
+    batch_fp = IO.checkpoint(
+        batch.select("doc_id", "url", "text", fp_udf(F.col("text")).alias("fp"))
+        .select("doc_id", "url", "text", "fp.*")
+    )
+    IO.row_count(batch_fp)
 
     if os.path.exists(os.path.join(acc_path, "_SUCCESS")):
         acc = spark.read.parquet(acc_path)

@@ -310,6 +310,22 @@ spark.stop()
 """
 
 
+def _run_child(script: str, *args: str) -> dict:
+    """Run ``script`` in a fresh interpreter (its own SparkContext) with
+    the repo on PYTHONPATH; return the JSON on its last stdout line."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_DRIVER_MEM="1g")
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (repo, env.get("PYTHONPATH")) if p
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", script, *args],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    return json.loads(proc.stdout.strip().splitlines()[-1])
+
+
 def test_cc_same_labels_under_task_retry():
     """A task of the CC edge input fails on its first attempt and Spark
     retries it (local[4,3]): the labels must equal the failure-free run
@@ -319,20 +335,70 @@ def test_cc_same_labels_under_task_retry():
         {tuple(sorted(rng.sample(range(400), 2))) for _ in range(250)}
         | {(i, i + 1) for i in range(500, 540)}
     )
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    env = dict(os.environ, SPARK_DRIVER_MEM="1g")
-    env["PYTHONPATH"] = os.pathsep.join(
-        p for p in (repo, env.get("PYTHONPATH")) if p
-    )
     with tempfile.TemporaryDirectory() as marker_dir:
-        proc = subprocess.run(
-            [sys.executable, "-c", _RETRY_CHILD, json.dumps(edges), marker_dir],
-            cwd=repo, env=env, capture_output=True, text=True, timeout=600,
-        )
-        assert proc.returncode == 0, proc.stderr[-4000:]
+        out = _run_child(_RETRY_CHILD, json.dumps(edges), marker_dir)
         # the injected failure really fired (else the test is vacuous)
         assert os.listdir(marker_dir)
-    out = json.loads(proc.stdout.strip().splitlines()[-1])
     expect = sorted([n, c] for n, c in _comp_min_expect(edges).items())
     assert out["clean"] == expect
     assert out["retried"] == expect
+
+
+# A checkpoint dir cannot be unset on a SparkContext, so the reliable
+# path runs in its own interpreter; the local-path pipeline runs first.
+_RELIABLE_CHILD = r"""
+import json, os, sys
+from image_dedup_spark.corpus import generate_corpus
+from image_dedup_spark.operators import components as CC
+from image_dedup_spark.plans.pipeline import run_pipeline
+from image_dedup_spark.session import get_spark
+
+edges, ckpt_dir = json.loads(sys.argv[1]), sys.argv[2]
+spark = get_spark(cores=4)
+pages, _ = generate_corpus(spark, 400, seed=5)
+pages = pages.cache()
+
+
+def files_under(root):
+    return sum(len(names) for _, _, names in os.walk(root))
+
+
+def clusters():
+    res = run_pipeline(spark, pages)
+    return sorted([r.doc_id, r.cluster_id] for r in res.clusters.collect())
+
+
+local = clusters()
+spark.sparkContext.setCheckpointDir(ckpt_dir)
+df = spark.createDataFrame(edges, "src_id long, dst_id long")
+labels = sorted(
+    [r.doc_id, r.cluster_id] for r in CC.connected_components(df).collect()
+)
+files_after_cc = files_under(ckpt_dir)
+reliable = clusters()
+print(json.dumps({
+    "labels": labels, "local": local, "reliable": reliable,
+    "files_after_cc": files_after_cc,
+    "files_after_pipeline": files_under(ckpt_dir),
+}))
+spark.stop()
+"""
+
+
+def test_reliable_checkpoint_path_matches_local():
+    """With ``sc.setCheckpointDir`` set, the lineage cut is a reliable
+    checkpoint: CC labels still equal union-find, and run_pipeline's
+    clusters equal the local-checkpoint run's. Both the CC loop and the
+    pipeline stages must really write checkpoint files."""
+    rng = random.Random(43)
+    edges = sorted(
+        {tuple(sorted(rng.sample(range(300), 2))) for _ in range(200)}
+        | {(i, i + 1) for i in range(400, 430)}
+    )
+    with tempfile.TemporaryDirectory() as ckpt_dir:
+        out = _run_child(_RELIABLE_CHILD, json.dumps(edges), ckpt_dir)
+    expect = sorted([n, c] for n, c in _comp_min_expect(edges).items())
+    assert out["labels"] == expect
+    assert out["files_after_cc"] > 0
+    assert out["files_after_pipeline"] > out["files_after_cc"]
+    assert out["local"] and out["reliable"] == out["local"]

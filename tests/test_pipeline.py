@@ -1,5 +1,7 @@
 """End-to-end pipeline + resume idempotence (SURVEY.md §5 tiers 3-4)."""
 
+import glob
+import re
 import shutil
 
 import pyspark.sql.functions as F
@@ -106,6 +108,55 @@ def test_pipeline_resume_idempotent(spark, corpus, tmp_path_factory):
     lineage = spark.read.parquet(f"{ckpt}/_lineage/03_fingerprints")
     fp_rows = {m["stage"]: m["rows_out"] for m in r1.metrics}["03_fingerprints"]
     assert lineage.agg(F.sum("count")).first()[0] == fp_rows
+
+
+def test_stage_plans_run_once_and_rows_out_match(spark, corpus, tmp_path_factory):
+    """Each stage's plan runs once, in memory and with a checkpoint dir
+    (whose lineage record is read off the written part files, not a
+    second run of the stage plan): the pages feed only 01_filtered and
+    01_quarantine, so they are read exactly twice per pipeline run.
+    Every stage's rows_out equals its table's row count, and each
+    stage's lineage record has one row per part file summing to it."""
+    from image_dedup_spark.session import drop_zip_finders
+
+    pages, _ = corpus
+    n_pages = pages.count()
+    rows_read = spark.sparkContext.accumulator(0)
+
+    def counted(batches):
+        drop_zip_finders()
+        for b in batches:
+            rows_read.add(len(b))
+            yield b
+
+    src = pages.mapInPandas(counted, pages.schema)
+    ckpt = str(tmp_path_factory.mktemp("ckpt_once"))
+    results = {}
+    for checkpoint_dir in (None, ckpt):
+        rows_read.value = 0
+        results[checkpoint_dir] = run_pipeline(
+            spark, src, checkpoint_dir=checkpoint_dir
+        )
+        assert rows_read.value == 2 * n_pages, checkpoint_dir
+    mem, disk = results[None], results[ckpt]
+
+    rows_out = {m["stage"]: m["rows_out"] for m in disk.metrics}
+    assert {m["stage"]: m["rows_out"] for m in mem.metrics} == rows_out
+    for name, n in rows_out.items():
+        assert spark.read.parquet(f"{ckpt}/{name}").count() == n, name
+        lineage = spark.read.parquet(f"{ckpt}/_lineage/{name}")
+        assert (lineage.agg(F.sum("count")).first()[0] or 0) == n, name
+        ids = [r.partition_id for r in lineage.collect()]
+        parts = {
+            int(re.search(r"part-(\d+)", p).group(1))
+            for p in glob.glob(f"{ckpt}/{name}/part-*")
+        }
+        assert len(ids) == len(set(ids)) and set(ids) <= parts, name
+    for name, table in [
+        ("01_quarantine", mem.quarantine), ("07_all_pairs", mem.pairs),
+        ("08_clusters", mem.clusters), ("09_survivors", mem.survivors),
+    ]:
+        assert table.count() == rows_out[name], name
 
 
 def test_pipeline_refuses_mismatched_checkpoint_format(spark, corpus, tmp_path_factory):
