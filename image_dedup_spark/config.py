@@ -90,25 +90,6 @@ class DedupConfig:
 
     # --- connected components --------------------------------------------
     cc_max_iterations: int = 50
-    # Broadcast cap for the changed set: when the previous CC probe
-    # counted at most this many changed labels, the next round
-    # broadcasts those vertices into the pinned edge table (a map-side
-    # filter, no edge shuffle) instead of shuffle-joining them. Dup
-    # graphs shrink to a small changed set after one round (131
-    # changed labels out of 1M docs on the bench corpus). The cap bounds
-    # broadcast memory (~16B/row): 600k rows is ~30MB hashed — small
-    # against executor memory at any level.
-    cc_frontier_max: int = 600_000
-    # Cluster-assignment join strategy: the corpus-sized labels table
-    # only needs comp rows whose component min DIFFERS from the keeper
-    # (quiescent keepers coalesce to themselves), and that "moved" set
-    # is usually a small fraction of the corpus. At or below this many
-    # moved rows the assign join broadcasts them — the corpus scan
-    # stays map-side, no multi-million-row shuffle of the labels table.
-    # 4M rows x ~40B hashed ~ 160MB, comfortable against the 8g driver
-    # and ordinary executor memory; above the cap the shuffle join is
-    # kept (correct at any size).
-    assign_bcast_max: int = 4_000_000
     # greedy (reference-compat) survivor mode: components with more
     # edges than this skip the single-task pandas greedy pass and fall
     # back to keep-first (min doc_id) — bounds per-task memory against

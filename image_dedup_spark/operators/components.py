@@ -15,20 +15,21 @@ Scale notes: every iteration has one shape — offers from the vertices
 whose label changed last round, a min-label groupBy, then a global
 pointer jump (large-star/small-star, Kiveris et al., SoCC 2014), so the
 round count is O(log n). The changed set is broadcast into the pinned
-edge table when the previous probe counted at most
-``cfg.cc_frontier_max`` of them (see :func:`connected_components`).
-Lineage is truncated every round with the engine's one lineage cut,
-``sources.io.checkpoint`` (reliable ``checkpoint()`` when the
+edge table when the previous probe's count of it fits Spark's broadcast
+threshold (:func:`_broadcast_if_fits`, which also gates the assign
+join). Lineage is truncated every round with the engine's one lineage
+cut, ``sources.io.checkpoint`` (reliable ``checkpoint()`` when the
 SparkContext has a checkpoint dir, a lazy ``localCheckpoint``
 otherwise), plus a statistics reset (:func:`_truncate_lineage`); the
-convergence probe (count of changed labels, computed inside the round's
-own aggregation) rides the job that fills the lazy checkpoint. No
-driver-side graph materialization ever happens beyond the bounded
-changed-set broadcast.
+convergence probe (counts of changed and moved labels, computed inside
+the round's own aggregation) rides the job that fills the lazy
+checkpoint. No driver-side graph materialization ever happens beyond
+the bounded broadcasts.
 """
 
 from __future__ import annotations
 
+import re
 import time
 
 import pandas as pd
@@ -77,6 +78,34 @@ def _truncate_lineage(df: DataFrame) -> DataFrame:
     return DataFrame(new_jdf, spark)
 
 
+_UNIT_SHIFT = {"": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
+
+
+def _byte_size(text: str) -> int:
+    """Bytes in one of Spark's size strings (``67108864``, ``10485760b``,
+    ``64m``, ``10MB``). The sign is kept: Spark reads a negative
+    broadcast threshold (``-1``) as "never broadcast"."""
+    m = re.fullmatch(r"(-?\d+)([kmgtp]?)b?", text.strip().lower())
+    if m is None:
+        raise ValueError(f"not a Spark byte size: {text!r}")
+    return int(m.group(1)) << _UNIT_SHIFT[m.group(2)]
+
+
+def _broadcast_if_fits(df: DataFrame, n_rows: int) -> DataFrame:
+    """``F.broadcast(df)`` when ``n_rows`` (a count the caller already
+    has) times Spark's per-row size estimate fits under
+    ``spark.sql.autoBroadcastJoinThreshold``, the limit Spark's planner
+    applies to its own statistics; otherwise ``df`` as is, so an
+    oversized build side degrades to a shuffle join instead of failing.
+    The estimate is an 8-byte row header plus 8 bytes per (long id)
+    column: 24 B for (doc_id, cluster_id), ~2.8M rows under the 64 MB
+    :func:`session.get_spark` sets."""
+    conf = df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    if n_rows * (8 + 8 * len(df.columns)) <= _byte_size(conf):
+        return F.broadcast(df)
+    return df
+
+
 def connected_components(
     edges: DataFrame,
     cfg: DedupConfig = DEFAULT,
@@ -95,8 +124,8 @@ def connected_components(
     neighbor's label was already folded in whenever it last changed —
     labels are monotone non-increasing), the groupBy still carries every
     vertex's self row, and a global pointer jump (label := label(label))
-    follows. When the previous probe counted at most
-    ``cfg.cc_frontier_max`` changed labels, the changed set is broadcast
+    follows. While the previous probe's changed count fits the broadcast
+    threshold (:func:`_broadcast_if_fits`), the changed set is broadcast
     into the pinned edge table, so the edge side is never shuffled; the
     gate reads a count the loop already takes, so it costs no job. Each
     round carries a ``changed`` flag computed inside its own aggregation
@@ -108,10 +137,20 @@ def connected_components(
 
     ``metrics_out``: optional list that receives one dict per probe
     barrier {"iteration", "seconds", "round_wall", "label_sum",
-    "changed", "converged", "mode"} (mode "warm" for the warm start,
-    "full" for every loop round), plus "ckpt_wall" on loop rounds — the
-    bench uses it to separate real propagation work from barrier
-    latency when comparing runs."""
+    "changed", "moved", "converged", "mode"} (mode "warm" for the warm
+    start, "full" for every loop round; "moved" counts labels that differ
+    from their doc_id), plus "ckpt_wall" on loop rounds — the bench uses
+    it to separate real propagation work from barrier latency when
+    comparing runs."""
+    return _label_loop(edges, cfg, metrics_out)[0]
+
+
+def _label_loop(
+    edges: DataFrame, cfg: DedupConfig, metrics_out: list | None
+) -> tuple[DataFrame, int]:
+    """:func:`connected_components`' labels, plus the last probe's count
+    of their moved rows (cluster_id != doc_id), which gates the assign
+    join's broadcast at no extra job (:func:`_moved`)."""
     # Pin the symmetrized edge table: every probe is its own Spark job,
     # and an unpinned `e` would replay the union shuffle each round
     # (shuffle reuse does not cross job boundaries). Lazy in local mode:
@@ -143,19 +182,21 @@ def connected_components(
 
     wall_anchor = [time.monotonic()]
 
-    def probe(lab: DataFrame, it: int, mode: str) -> int:
+    def probe(lab: DataFrame, it: int, mode: str) -> tuple[int, int]:
         """One job: materializes any pending lazy checkpoints in lab's
         plan AND counts the round's changed labels (the convergence
-        test and the next round's broadcast gate). The label sum
-        (decimal(38,0), immune to 64-bit wrap on hash-derived ids) is
-        kept in the metrics as a cross-run fingerprint of the labelling
-        itself."""
+        test and the next round's broadcast gate) and moved labels (the
+        assign join's broadcast gate, read after the last round). The
+        label sum (decimal(38,0), immune to 64-bit wrap on hash-derived
+        ids) is kept in the metrics as a cross-run fingerprint of the
+        labelling itself."""
         t0 = time.monotonic()
         row = lab.agg(
             F.sum(F.col("changed").cast("long")),
             F.sum(F.col("cluster_id").cast("decimal(38,0)")),
+            F.sum((F.col("cluster_id") != F.col("doc_id")).cast("long")),
         ).first()
-        n_changed = int(row[0] or 0)
+        n_changed, n_moved = int(row[0] or 0), int(row[2] or 0)
         if metrics_out is not None:
             metrics_out.append(
                 {
@@ -167,14 +208,15 @@ def connected_components(
                     "round_wall": round(time.monotonic() - wall_anchor[0], 3),
                     "label_sum": str(row[1]),
                     "changed": n_changed,
+                    "moved": n_moved,
                     "converged": n_changed == 0,
                     "mode": mode,
                 }
             )
         wall_anchor[0] = time.monotonic()
-        return n_changed
+        return n_changed, n_moved
 
-    n_changed = probe(labels, -1, "warm")
+    n_changed, n_moved = probe(labels, -1, "warm")
     for it in range(cfg.cc_max_iterations):
         if n_changed == 0:
             break
@@ -182,11 +224,11 @@ def connected_components(
         # The e-join's probe side shrinks to the changed subset (48% of
         # vertices after a typical warm start, and falling every round)
         # while the groupBy still carries every vertex's self row, so
-        # the fixpoint test stays exact. A changed set within the cap is
+        # the fixpoint test stays exact. A changed set that fits is
         # broadcast: the pinned edge table is then filtered map-side.
-        changed = labels.filter("changed").select("doc_id", "cluster_id")
-        if n_changed <= cfg.cc_frontier_max:
-            changed = F.broadcast(changed)
+        changed = _broadcast_if_fits(
+            labels.filter("changed").select("doc_id", "cluster_id"), n_changed
+        )
         nbr = e.join(changed, e.b == F.col("doc_id")).select(
             F.col("a").alias("doc_id"),
             "cluster_id",
@@ -223,27 +265,24 @@ def connected_components(
         t_ckpt = time.monotonic()
         labels = _truncate_lineage(labels)
         ckpt_wall = round(time.monotonic() - t_ckpt, 3)
-        n_changed = probe(labels, it, "full")
+        n_changed, n_moved = probe(labels, it, "full")
         if metrics_out is not None:
             metrics_out[-1]["ckpt_wall"] = ckpt_wall
-    return labels.select("doc_id", "cluster_id")
+    return labels.select("doc_id", "cluster_id"), n_moved
 
 
-def _moved(comp: DataFrame, cfg: DedupConfig) -> DataFrame:
+def _moved(comp: DataFrame, n_moved: int) -> DataFrame:
     """The rows of a :func:`connected_components` table whose cluster_id
     differs from doc_id — the only rows an assign join needs, since a
     vertex that IS its component min (or a doc outside the graph)
     coalesces to its own id either way.
 
-    The subset is counted (comp is pinned by the CC loop, so the count is
-    a cheap scan) and broadcast when it has at most
-    ``cfg.assign_bcast_max`` rows, keeping the corpus-sized probe side
-    map-side. Past the cap the join degrades to a shuffle join instead
-    of failing on an oversized build side."""
-    moved = comp.filter(F.col("cluster_id") != F.col("doc_id"))
-    if moved.count() <= cfg.assign_bcast_max:
-        moved = F.broadcast(moved)
-    return moved
+    ``n_moved`` is their count from the loop's last probe
+    (:func:`_label_loop`); when it fits (:func:`_broadcast_if_fits`) the
+    subset is broadcast, keeping the corpus-sized probe side map-side."""
+    return _broadcast_if_fits(
+        comp.filter(F.col("cluster_id") != F.col("doc_id")), n_moved
+    )
 
 
 def assign_clusters(
@@ -254,8 +293,8 @@ def assign_clusters(
     """Every doc gets a cluster_id (its own id when untouched by any edge)
     and is_representative (deterministic min-doc_id rule). Docs join
     only the moved component rows (:func:`_moved`)."""
-    comp = connected_components(edges, cfg, metrics_out=metrics_out)
-    moved = _moved(comp, cfg).withColumnRenamed("doc_id", id_col)
+    comp, n_moved = _label_loop(edges, cfg, metrics_out)
+    moved = _moved(comp, n_moved).withColumnRenamed("doc_id", id_col)
     return (
         docs.join(moved, id_col, "left")
         .withColumn("cluster_id", F.coalesce("cluster_id", F.col(id_col)))
@@ -305,13 +344,13 @@ def assign_clusters_via_labels(
     derived from ``labels`` directly and the corpus-sized
     docs-join-back (a full sort-merge join that only re-discovers rows
     the labels table already enumerates) is skipped entirely."""
-    comp = connected_components(near_edges, cfg, metrics_out=metrics_out)
+    comp, n_moved = _label_loop(near_edges, cfg, metrics_out)
     # Only keepers whose component min DIFFERS from themselves matter,
     # broadcast when they fit so the corpus-sized labels table is never
     # shuffled on the join key — the assign step becomes one map-side
     # pass (this join was the worst-scaling piece of the CC stage: a
     # 5M x ~3M shuffle join at bench scale).
-    comp_k = _moved(comp, cfg).select(
+    comp_k = _moved(comp, n_moved).select(
         F.col("doc_id").alias("keeper"), F.col("cluster_id").alias("_comp_min")
     )
     lab = (

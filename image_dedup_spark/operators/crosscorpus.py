@@ -23,10 +23,11 @@ from image_dedup_spark.operators.lsh import _sig_jaccard_estimate, minhash_band_
 
 
 def exact_remain(src: DataFrame, gallery: DataFrame, key: str = "exact_key") -> DataFrame:
-    """Rows of src whose exact key has no match in gallery (LEFT ANTI)."""
-    return src.join(
-        F.broadcast(gallery.select(key).distinct()), key, "left_anti"
-    )
+    """Rows of src whose exact key has no match in gallery (LEFT ANTI).
+    Spark's planner broadcasts the gallery's key set when its estimated
+    size fits ``spark.sql.autoBroadcastJoinThreshold`` and shuffles both
+    sides otherwise, so a large gallery degrades instead of failing."""
+    return src.join(gallery.select(key).distinct(), key, "left_anti")
 
 
 def exact_merge(acc: DataFrame, incoming: DataFrame, key: str = "exact_key") -> DataFrame:

@@ -138,10 +138,10 @@ def candidate_pairs(
         # branches, whose projections alias columns differently, so
         # Catalyst's ReuseExchange never fires and the
         # scan→explode→window subtree would otherwise execute three
-        # times (measured: ~2× the stage's CPU at 1M+ docs; at <=200k
-        # the recompute is cheaper than the materialization pass, so
-        # small callers pass scope=None). It holds only non-singleton
-        # band rows — a small fraction of the band table.
+        # times (measured: ~2× the stage's CPU; the cache wins at every
+        # measured scale, so the pipeline always scopes — see
+        # caching.py). It holds only non-singleton band rows — a small
+        # fraction of the band table.
         nonsingleton = sized.filter(F.col("bucket_n") >= 2)
         if scope is not None:
             nonsingleton = scope.cache(nonsingleton)

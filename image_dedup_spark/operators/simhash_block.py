@@ -2,12 +2,12 @@
 (the reference runs BOTH phash and dhash passes,
 /root/reference/image_deduper.cpp:293-359; here MinHash + SimHash).
 
-A 256-bit SimHash in 4 longs is split into 16-bit bands; two docs within
-Hamming distance < thr must agree exactly on at least one band whenever
-thr <= nbits/bands * ... (pigeonhole: with 16 bands, any pair differing
-in < 16 bands' worth of bits agrees on >= 1 band if the differing bits
-hit < 16 distinct bands — probabilistic for larger thr, like the
-reference's threshold semantics). Verification is exact Hamming with the
+A 256-bit SimHash in 4 longs is split into ``cfg.simhash_bands`` bands
+(32 bands of 8 bits by default). Two docs within Hamming distance < thr
+agree exactly on at least one band whenever thr <= bands (pigeonhole:
+fewer differing bits than bands leave some band untouched), so with
+thr = 30 < 32 bands recall is deterministic while every band bucket
+stays under ``cfg.bucket_cap``. Verification is exact Hamming with the
 popcount prefilter (triangle inequality |pop(a)-pop(b)| <= hamming(a,b),
 the reference's trick at /root/reference/samples.cpp:584-585,616-617).
 """
@@ -26,8 +26,9 @@ from image_dedup_spark.operators.lsh import candidate_pairs
 def simhash_band_table(
     df: DataFrame, cfg: DedupConfig = DEFAULT, id_col: str = "doc_id"
 ) -> DataFrame:
-    """(doc_id, band_key): 16-bit slices of the simhash words, keyed with
-    the band index. Pure bit arithmetic — codegen'd, no UDF."""
+    """(doc_id, band_key): ``cfg.simhash_bands`` equal slices of the
+    simhash words (8 bits each by default), keyed with the band index.
+    Pure bit arithmetic — codegen'd, no UDF."""
     n_words = cfg.simhash_bits // 64
     bands_per_word = cfg.simhash_bands // n_words
     width = 64 // bands_per_word

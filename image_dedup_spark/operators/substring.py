@@ -238,6 +238,16 @@ def _group_suffix_spans(
     )
 
 
+def _shared_chunks(ch: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """The rows of chunk inventory ``ch`` whose chunk_hash occurs in more
+    than one and at most ``cfg.bucket_cap`` distinct docs: a chunk of one
+    doc pairs with nothing, and ubiquitous chunks (boilerplate) are
+    dropped, the same skew policy as the LSH buckets."""
+    n_docs = ch.select("doc_id", "chunk_hash").distinct().groupBy("chunk_hash").count()
+    keep = n_docs.filter((F.col("count") > 1) & (F.col("count") <= cfg.bucket_cap))
+    return ch.join(keep.select("chunk_hash"), "chunk_hash")
+
+
 _SPAN_SCHEMA = (
     "src_id long, dst_id long, span_len long, src_pos long, dst_pos long"
 )
@@ -279,13 +289,9 @@ def suffix_array_spans(
     dropped with the same accounting as LSH buckets), so per-task memory
     is bounded regardless of corpus size. The reference left this as a
     TODO ('nlogN by sort or tree method', main.cpp:86-87)."""
-    ch = chunk_table(docs, cfg, id_col).dropDuplicates(["doc_id", "chunk_hash"])
-    freq = ch.groupBy("chunk_hash").agg(F.count("*").alias("n_docs"))
-    shared = ch.join(
-        freq.filter(
-            (F.col("n_docs") > 1) & (F.col("n_docs") <= cfg.bucket_cap)
-        ),
-        "chunk_hash",
+    shared = _shared_chunks(
+        chunk_table(docs, cfg, id_col).dropDuplicates(["doc_id", "chunk_hash"]),
+        cfg,
     )
     # One group per DISTINCT doc-set, not per shared chunk: a long shared
     # span yields many interior chunks all shared by the same doc set, and
@@ -324,16 +330,9 @@ def chunk_pairs(ch: DataFrame, cfg: DedupConfig = DEFAULT) -> DataFrame:
     chunk inventory (doc_id, chunk_hash, pos, length) — the relational
     half of the substring mode, shared by every chunker variant.
 
-    Ubiquitous chunks (> bucket_cap docs — boilerplate) are dropped
-    before pair expansion, same skew policy as the LSH buckets."""
-    ch = ch.dropDuplicates(["doc_id", "chunk_hash"])
-    freq = ch.groupBy("chunk_hash").agg(F.count("*").alias("n_docs"))
-    common = ch.join(
-        freq.filter(
-            (F.col("n_docs") > 1) & (F.col("n_docs") <= cfg.bucket_cap)
-        ),
-        "chunk_hash",
-    )
+    Only shared, non-ubiquitous chunks (:func:`_shared_chunks`) reach
+    the pair expansion."""
+    common = _shared_chunks(ch.dropDuplicates(["doc_id", "chunk_hash"]), cfg)
     a = common.select(
         "chunk_hash", F.col("doc_id").alias("src_id"), F.col("length").alias("len")
     )
@@ -440,18 +439,7 @@ def chunk_run_spans(
     spans — the tradeoff for a pure-relational plan."""
     from pyspark.sql import Window
 
-    freq = (
-        ch.select("doc_id", "chunk_hash")
-        .distinct()
-        .groupBy("chunk_hash")
-        .agg(F.count("*").alias("n_docs"))
-    )
-    kept = ch.join(
-        freq.filter(
-            (F.col("n_docs") > 1) & (F.col("n_docs") <= cfg.bucket_cap)
-        ).select("chunk_hash"),
-        "chunk_hash",
-    )
+    kept = _shared_chunks(ch, cfg)
     idx_w = Window.partitionBy("doc_id").orderBy("pos")
     c = kept.withColumn("idx", F.row_number().over(idx_w))
     a = c.select(

@@ -169,8 +169,7 @@ def run_pipeline(
         if resumed:
             df = IO.read_stage(spark, checkpoint_dir, name)
         elif checkpoint_dir:
-            IO.write_stage(build(), checkpoint_dir, name)
-            df = IO.read_stage(spark, checkpoint_dir, name)
+            df = IO.write_stage(build(), checkpoint_dir, name)
             IO.write_stage(
                 IO.partition_lineage(df, name), checkpoint_dir, f"_lineage/{name}"
             )

@@ -20,6 +20,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 
 def stage_path(checkpoint_dir: str, stage: str) -> str:
@@ -32,8 +33,28 @@ def stage_exists(checkpoint_dir: str | None, stage: str) -> bool:
     return os.path.exists(os.path.join(stage_path(checkpoint_dir, stage), "_SUCCESS"))
 
 
-def write_stage(df: DataFrame, checkpoint_dir: str, stage: str) -> None:
-    df.write.mode("overwrite").parquet(stage_path(checkpoint_dir, stage))
+def _as_stored(t: DataType) -> DataType:
+    """``t`` as Spark's parquet writer stores it: every struct field,
+    array element and map value nullable, at any depth."""
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _as_stored(f.dataType), True, f.metadata) for f in t]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_as_stored(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_as_stored(t.keyType), _as_stored(t.valueType), True)
+    return t
+
+
+def write_stage(df: DataFrame, checkpoint_dir: str, stage: str) -> DataFrame:
+    """Write ``df`` as the stage's parquet directory and return the stage
+    read back. The read-back takes ``df``'s schema as stored, so it skips
+    parquet schema inference (a Spark job); :func:`read_stage`, the
+    resume path, has no schema in hand and infers it."""
+    path = stage_path(checkpoint_dir, stage)
+    df.write.mode("overwrite").parquet(path)
+    return df.sparkSession.read.schema(_as_stored(df.schema)).parquet(path)
 
 
 def read_stage(spark: SparkSession, checkpoint_dir: str, stage: str) -> DataFrame:

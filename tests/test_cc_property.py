@@ -5,13 +5,17 @@ executor-side change counts, changed-source offers, per-round pointer
 jumping) — fixed-shape tests pin the known regimes, hypothesis sweeps
 the graph space for shapes nobody thought to pin: duplicate edges,
 self-loops, long chains, components that merge late. Every example is
-checked under BOTH a broadcast-always and a broadcast-never cap for the
-changed set, so the two physical shapes of the changed-set join can
-never diverge semantically without a counterexample landing here.
+checked under BOTH a broadcast-always and a broadcast-never Spark
+broadcast threshold, so the two physical shapes of the changed-set join
+(and of the assign join) can never diverge semantically without a
+counterexample landing here.
 """
 
+import random
+from contextlib import contextmanager, nullcontext
+
 import pytest
-from dataclasses import replace
+import pyspark.sql.functions as F
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -19,10 +23,23 @@ from hypothesis import strategies as st
 from image_dedup_spark.config import DEFAULT
 from image_dedup_spark.operators import components as CC
 
-# The changed set broadcast into the edge table every round vs never
-# (every round shuffle-joins it with the edge table).
-BCAST_ALWAYS = replace(DEFAULT, cc_frontier_max=10**9)
-BCAST_NEVER = replace(DEFAULT, cc_frontier_max=0)
+THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
+# Every forced broadcast taken ("1g") vs none ("-1": every changed set
+# is shuffle-joined with the edge table, the assign join shuffles too).
+BCAST_ALWAYS, BCAST_NEVER = "1g", "-1"
+
+
+@contextmanager
+def broadcast_threshold(spark, value):
+    """Run the block under ``spark.sql.autoBroadcastJoinThreshold`` =
+    ``value``, restoring the previous value after: the session is
+    shared by the whole test run."""
+    old = spark.conf.get(THRESHOLD)
+    spark.conf.set(THRESHOLD, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(THRESHOLD, old)
 
 
 def _oracle(edges):
@@ -46,9 +63,10 @@ def _oracle(edges):
     return sorted(out.items())
 
 
-def _run(spark, edges, cfg, metrics_out=None):
+def _run(spark, edges, threshold=None, metrics_out=None):
     df = spark.createDataFrame(edges, "src_id long, dst_id long")
-    got = CC.connected_components(df, cfg=cfg, metrics_out=metrics_out).collect()
+    with nullcontext() if threshold is None else broadcast_threshold(spark, threshold):
+        got = CC.connected_components(df, metrics_out=metrics_out).collect()
     return sorted((r.doc_id, r.cluster_id) for r in got)
 
 
@@ -79,9 +97,9 @@ def test_cc_long_chain_converges_in_log_rounds(spark):
     n = 64
     edges = [(i, i + 1) for i in range(n - 1)]
     expect = [(v, 0) for v in range(n)]
-    for cfg in (BCAST_ALWAYS, BCAST_NEVER):
+    for threshold in (BCAST_ALWAYS, BCAST_NEVER):
         probes = []
-        assert _run(spark, edges, cfg, probes) == expect
+        assert _run(spark, edges, threshold, probes) == expect
         rounds = [p for p in probes if p["mode"] != "warm"]
         assert len(rounds) <= 8, [p["changed"] for p in probes]
         assert probes[-1]["converged"]
@@ -90,7 +108,7 @@ def test_cc_long_chain_converges_in_log_rounds(spark):
 def test_cc_self_loops_and_duplicates_only(spark):
     edges = [(5, 5), (5, 5), (7, 3), (3, 7), (7, 3)]
     expect = [(3, 3), (5, 5), (7, 3)]
-    assert _run(spark, edges, DEFAULT) == expect
+    assert _run(spark, edges) == expect
 
 
 def test_cc_late_merge_of_two_big_components(spark):
@@ -103,3 +121,60 @@ def test_cc_late_merge_of_two_big_components(spark):
     expect = [(v, 0) for v in list(range(6)) + list(range(10, 16))]
     assert _run(spark, edges, BCAST_ALWAYS) == expect
     assert _run(spark, edges, BCAST_NEVER) == expect
+
+
+def test_byte_size_reads_spark_size_strings():
+    assert CC._byte_size("67108864") == 64 * 1024**2
+    assert CC._byte_size("10485760b") == 10 * 1024**2
+    assert CC._byte_size("64m") == CC._byte_size("64MB") == 64 * 1024**2
+    assert CC._byte_size(" 1g ") == 1024**3
+    assert CC._byte_size("-1") == -1
+    with pytest.raises(ValueError):
+        CC._byte_size("1.5g")
+
+
+def test_probe_moved_count_matches_labels(spark):
+    """The last probe's moved count, which gates the assign broadcast
+    without a count job, equals the labels' cluster_id != doc_id rows."""
+    rng = random.Random(7)
+    for n_edges in (1, 40, 300):
+        edges = [(rng.randrange(60), rng.randrange(60)) for _ in range(n_edges)]
+        df = spark.createDataFrame(edges, "src_id long, dst_id long")
+        probes = []
+        comp, n_moved = CC._label_loop(df, DEFAULT, probes)
+        expect = sum(v != c for v, c in _oracle(edges))
+        assert n_moved == probes[-1]["moved"] == expect
+        assert comp.filter(F.col("cluster_id") != F.col("doc_id")).count() == n_moved
+
+
+def test_assign_via_labels_same_under_broadcast_and_shuffle(spark):
+    """assign_clusters_via_labels gives the union-find clusters of the
+    full graph (exact keeper stars + near edges between keepers) with
+    the moved-set join broadcast (the default threshold) and shuffled
+    (threshold -1)."""
+    rng = random.Random(13)
+    doc_id, labels_rows, keepers, exact = 0, [], [], []
+    for _g in range(40):
+        members = list(range(doc_id, doc_id + rng.randint(1, 5)))
+        doc_id += len(members)
+        keepers.append(members[0])
+        labels_rows += [(m, members[0]) for m in members]
+        exact += [(members[0], m) for m in members[1:]]
+    near = sorted({tuple(sorted(rng.sample(keepers, 2))) for _ in range(30)})
+    labels = spark.createDataFrame(labels_rows, "doc_id long, keeper long")
+    near_df = spark.createDataFrame(near, "src_id long, dst_id long")
+    expect = dict((v, v) for v, _ in labels_rows)
+    expect.update(_oracle(exact + near))
+
+    outs = {}
+    for threshold in (spark.conf.get(THRESHOLD), BCAST_NEVER):
+        with broadcast_threshold(spark, threshold):
+            out = CC.assign_clusters_via_labels(None, labels, near_df)
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert ("BroadcastHashJoin" in plan) == (threshold != BCAST_NEVER), plan
+            outs[threshold] = {
+                r.doc_id: (r.cluster_id, r.is_representative) for r in out.collect()
+            }
+    broadcast, shuffled = outs.values()
+    assert broadcast == shuffled
+    assert broadcast == {d: (c, d == c) for d, c in expect.items()}

@@ -161,10 +161,11 @@ def test_greedy_survivors_mega_component_fallback(spark):
 
 def test_frontier_rounds_used_and_correct(spark):
     """30k isolated doc pairs converge at the warm start, plus one
-    12-node chain whose propagation runs in rounds over a small frontier
-    (the changed set, broadcast into the edge table under
-    ``cc_frontier_max``). Labels must match the keep-first rule, and the
-    probes must carry the fields perfbench/run.py and bench.py read."""
+    12-node chain whose propagation runs in rounds over a small changed
+    set (broadcast into the edge table while its probed count fits
+    Spark's broadcast threshold). Labels must match the keep-first rule,
+    and the probes must carry the fields perfbench/run.py and bench.py
+    read."""
     import pyspark.sql.functions as F
 
     pairs = (

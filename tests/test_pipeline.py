@@ -7,6 +7,8 @@ import shutil
 import pyspark.sql.functions as F
 
 from image_dedup_spark.plans.pipeline import run_pipeline
+from image_dedup_spark.sources import io as IO
+from image_dedup_spark.sources.io import write_stage
 
 
 def test_pipeline_end_to_end(spark, corpus):
@@ -82,11 +84,26 @@ def test_sequential_counterexample_semantics(spark):
     assert {r.doc_id: r.cluster_id for r in seq.collect()} == {1: 1, 2: 1, 3: 3}
 
 
-def test_pipeline_resume_idempotent(spark, corpus, tmp_path_factory):
+def test_pipeline_resume_idempotent(spark, corpus, tmp_path_factory, monkeypatch):
+    """Resume after a crash and a full resume give the fresh run's
+    survivors. Every stage a fresh run reads back (with the written
+    schema, no inference) has the schema a resume infers from its files."""
     pages, _ = corpus
     ckpt = str(tmp_path_factory.mktemp("ckpt"))
+    fresh = {}
+
+    def recorded(df, checkpoint_dir, stage):
+        out = write_stage(df, checkpoint_dir, stage)
+        fresh[stage] = out.schema
+        return out
+
+    monkeypatch.setattr(IO, "write_stage", recorded)
     r1 = run_pipeline(spark, pages, checkpoint_dir=ckpt)
     first = sorted(r.doc_id for r in r1.survivors.collect())
+    stages = [m["stage"] for m in r1.metrics]
+    assert set(stages) <= set(fresh), stages
+    for stage, schema in fresh.items():
+        assert IO.read_stage(spark, ckpt, stage).schema == schema, stage
 
     # simulate a crash after stage 04: delete later stages, resume
     for stage in ["05_simhash_pairs", "07_all_pairs", "08_clusters", "09_survivors"]:
