@@ -26,7 +26,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import pyspark.sql.functions as F
 
-from image_dedup_spark.caching import CacheScope
 from image_dedup_spark.config import DEFAULT
 from image_dedup_spark.corpus import expanded_documents
 from image_dedup_spark.functions.fingerprints import make_fingerprint_udf
@@ -139,16 +138,13 @@ def main() -> None:
     # Both near-dup pair families in ONE action — shared fingerprint
     # scan, one job submission, one localCheckpoint — so the per-stage
     # fixed floor (~9s of job-submission/AQE/barrier cost per action
-    # measured in BENCH/ANALYSIS_r2.md) is paid once, not twice. The
-    # candidate-table caches are scoped (caller-owned, released right
-    # after the consuming localCheckpoint).
+    # measured in BENCH/ANALYSIS_r2.md) is paid once, not twice.
     def _near_pairs():
-        with CacheScope() as scope:
-            return (
-                LSH.minhash_dup_pairs(fp, DEFAULT, mode="estimate", scope=scope)
-                .unionByName(SB.simhash_dup_pairs(fp, DEFAULT, scope=scope))
-                .localCheckpoint(eager=True)
-            )
+        return (
+            LSH.minhash_dup_pairs(fp, DEFAULT, mode="estimate")
+            .unionByName(SB.simhash_dup_pairs(fp, DEFAULT))
+            .localCheckpoint(eager=True)
+        )
 
     near_pairs = timed("q_dup_pairs", _near_pairs)
 
@@ -200,15 +196,13 @@ def main() -> None:
     # occupancy stays bounded at any size.
     emb_dim = 64
     def _ann():
-        with CacheScope() as scope:
-            return SIM.lsh_topk(
-                emb,
-                dim=emb_dim,
-                k=5,
-                n_planes=SIM.planes_for(n_emb, target_bucket=8),
-                n_tables=4,
-                scope=scope,
-            ).count()
+        return SIM.lsh_topk(
+            emb,
+            dim=emb_dim,
+            k=5,
+            n_planes=SIM.planes_for(n_emb, target_bucket=8),
+            n_tables=4,
+        ).count()
 
     timed("q_embedding_lsh_topk", _ann)
 

@@ -40,6 +40,7 @@ from image_dedup_spark.operators import quality as Q
 from image_dedup_spark.operators import simhash_block as SB
 from image_dedup_spark.plans.pipeline import run_pipeline
 from image_dedup_spark.session import get_spark
+from image_dedup_spark.sources import io as IO
 
 
 def _read(spark, path):
@@ -92,9 +93,11 @@ def cmd_gen_exact(spark, a):
 
 def cmd_dedup_exact(spark, a):
     df = _read(spark, a.input)
-    _write(EX.survivors(df), a.output)
+    # One md5+normalize pass: survivors and pairs both derive from it.
+    lab = IO.checkpoint(EX.labels(df))
+    _write(EX.survivors_from_labels(df, lab), a.output)
     if a.pairs:
-        _write(EX.pairs(df), a.pairs)
+        _write(EX.pairs_from_labels(lab), a.pairs)
 
 
 def cmd_gen_fp(spark, a):

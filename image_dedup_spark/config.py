@@ -12,7 +12,7 @@ Semantics anchors from the reference (cited so parity is checkable):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -95,8 +95,6 @@ class DedupConfig:
     # back to keep-first (min doc_id) — bounds per-task memory against
     # pathological mega-components
     greedy_max_component: int = 2_000_000
-
-    extra: dict = field(default_factory=dict, compare=False)
 
 
 DEFAULT = DedupConfig()

@@ -108,12 +108,8 @@ def clusters(
 ) -> DataFrame:
     """(doc_id, cluster_id) where cluster_id = min doc_id sharing the key.
     Deterministic replacement for the reference's input-order grouping."""
-    key_col = exact_key(F.col("text")) if key_col is None else key_col
-    keyed = df.withColumn("exact_key", key_col)
-    w = Window.partitionBy("exact_key")
-    return keyed.select(
-        F.col(id_col),
-        F.min(id_col).over(w).alias("cluster_id"),
+    return labels(df, key_col, id_col).select(
+        F.col(id_col), F.col("keeper").alias("cluster_id")
     )
 
 
@@ -122,19 +118,4 @@ def pairs(
 ) -> DataFrame:
     """Duplicate edges (keeper -> duplicate) for the pair sink
     (reference .pair file, /root/reference/samples.cpp:504-507)."""
-    key_col = exact_key(F.col("text")) if key_col is None else key_col
-    keyed = df.withColumn("exact_key", key_col)
-    w = Window.partitionBy("exact_key")
-    return (
-        keyed.select(
-            F.col(id_col),
-            F.min(id_col).over(w).alias("keeper"),
-        )
-        .filter(F.col(id_col) != F.col("keeper"))
-        .select(
-            F.col("keeper").alias("src_id"),
-            F.col(id_col).alias("dst_id"),
-            F.lit(0.0).alias("score"),
-            F.lit("exact").alias("stage"),
-        )
-    )
+    return pairs_from_labels(labels(df, key_col, id_col), id_col)

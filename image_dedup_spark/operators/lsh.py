@@ -29,8 +29,8 @@ from dataclasses import replace
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from image_dedup_spark.caching import CacheScope
 from image_dedup_spark.config import DEFAULT, DedupConfig
+from image_dedup_spark.sources import io as IO
 
 
 def _salt(cfg: DedupConfig) -> Column:
@@ -72,7 +72,6 @@ def candidate_pairs(
     band_table: DataFrame,
     cfg: DedupConfig = DEFAULT,
     star: bool = True,
-    scope: CacheScope | None = None,
 ) -> DataFrame:
     """Distinct candidate (src_id < dst_id) pairs from a (doc_id, band_key)
     table, with the giant-bucket star+salt fallback.
@@ -89,11 +88,16 @@ def candidate_pairs(
     over-cap buckets instead, with the forgone pairs accounted in
     :func:`bucket_stats`.
 
-    ``scope``: optional :class:`CacheScope` owning the shared
-    non-singleton band materialization. The cache wins at every measured
-    scale (``caching.py``), so the pipeline always passes a scope and
-    releases it after the stage's consuming action. Without one, nothing
-    is cached and the band subtree is recomputed per consumer."""
+    The non-singleton band table feeds both self-join sides and, for
+    ``star=True``, the star and salted branches. Their projections alias
+    columns differently, so Catalyst's exchange reuse covers at most the
+    bucket-size exchange, not the window above it. The table is pinned
+    with :func:`image_dedup_spark.sources.io.checkpoint`, so every
+    consumer reads one computation whatever the optimizer reuses. The
+    pin's blocks are freed by Spark's ContextCleaner once the returned
+    DataFrame is garbage-collected. Without a pin the fused pair job at
+    1M docs ran 25% slower (PLANS.md, "One materialization
+    primitive")."""
     # Bucket sizing picks its physical shape by key-space cardinality
     # (both measured at 1M docs):
     #
@@ -126,25 +130,14 @@ def candidate_pairs(
             )
         )
         nonsingleton = band_table.join(sizes, "band_key")
-        if scope is not None:
-            nonsingleton = scope.cache(nonsingleton)
     else:
         w = Window.partitionBy("band_key")
         sized = band_table.withColumn(
             "bucket_n", F.count("*").over(w)
         ).withColumn("bucket_min", F.min("doc_id").over(w))
-        # Scope-cache the non-singleton table when the caller provides a
-        # scope: it feeds both sides of the self-join and the star+salt
-        # branches, whose projections alias columns differently, so
-        # Catalyst's ReuseExchange never fires and the
-        # scan→explode→window subtree would otherwise execute three
-        # times (measured: ~2× the stage's CPU; the cache wins at every
-        # measured scale, so the pipeline always scopes — see
-        # caching.py). It holds only non-singleton band rows — a small
-        # fraction of the band table.
+        # Only non-singleton band rows: a small fraction of the band table.
         nonsingleton = sized.filter(F.col("bucket_n") >= 2)
-        if scope is not None:
-            nonsingleton = scope.cache(nonsingleton)
+    nonsingleton = IO.checkpoint(nonsingleton)
     small = nonsingleton.filter(F.col("bucket_n") <= cfg.bucket_cap)
     a = small.select("band_key", F.col("doc_id").alias("src_id"))
     bb = small.select("band_key", F.col("doc_id").alias("dst_id"))
@@ -378,13 +371,8 @@ def minhash_dup_pairs(
     fingerprints: DataFrame,
     cfg: DedupConfig = DEFAULT,
     mode: str = "exact",
-    scope: CacheScope | None = None,
 ) -> DataFrame:
-    """signature table -> verified duplicate-pair edges (D2+F4 analogue).
-
-    ``scope``: owns the candidate-table cache (:func:`candidate_pairs`);
-    the caller releases it after the consuming action — no
-    InMemoryRelation outlives the call site."""
+    """signature table -> verified duplicate-pair edges (D2+F4 analogue)."""
     bands = minhash_band_table(fingerprints, cfg)
-    cands = candidate_pairs(bands, cfg, scope=scope)
+    cands = candidate_pairs(bands, cfg)
     return verify_pairs(cands, fingerprints, cfg, mode=mode)

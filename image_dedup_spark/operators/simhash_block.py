@@ -17,7 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from image_dedup_spark.caching import CacheScope
 from image_dedup_spark.config import DEFAULT, DedupConfig
 from image_dedup_spark.functions.hashing import hamming, popcount
 from image_dedup_spark.operators.lsh import candidate_pairs
@@ -80,7 +79,6 @@ def verify_hamming_pairs(
 def simhash_dup_pairs(
     fingerprints: DataFrame,
     cfg: DedupConfig = DEFAULT,
-    scope: "CacheScope | None" = None,
 ) -> DataFrame:
     """SimHash near-dup pairs: band-block → candidates → Hamming verify.
 
@@ -97,5 +95,5 @@ def simhash_dup_pairs(
     discriminating); at web scale the MinHash family is the primary
     recall path."""
     bands = simhash_band_table(fingerprints, cfg)
-    cands = candidate_pairs(bands, cfg, star=False, scope=scope)
+    cands = candidate_pairs(bands, cfg, star=False)
     return verify_hamming_pairs(cands, fingerprints, cfg)

@@ -15,7 +15,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from image_dedup_spark.caching import CacheScope
+from image_dedup_spark.sources import io as IO
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -98,7 +98,6 @@ def lsh_topk(
     bucket_cap: int = 4096,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    scope: "CacheScope | None" = None,
 ) -> DataFrame:
     """Approximate top-k: candidates = vectors sharing a bucket in any of
     n_tables independent hyperplane tables; exact cosine re-rank within
@@ -133,10 +132,13 @@ def lsh_topk(
     Plan shape: ONE projection computes every table's signature (the
     round-1 per-table loop re-executed the scan→dot-product subtree 3×
     per table = 12× total, the dominant cost of the bench query); the
-    narrow (id, bucket_0..bucket_T) table is cached and exploded into
-    (table_id, bucket) rows, from which both the index side and the
-    Hamming-1 probe side derive. Candidate generation is then a single
-    equi-join on (table_id, bucket) across all tables at once."""
+    narrow (id, bucket_0..bucket_T) table is pinned with
+    :func:`image_dedup_spark.sources.io.checkpoint` (its blocks are freed
+    by Spark's ContextCleaner once the result is garbage-collected) and
+    exploded into (table_id, bucket) rows, from which the bucket sizes,
+    the index side and the Hamming-1 probe side derive. Candidate
+    generation is then a single equi-join on (table_id, bucket) across
+    all tables at once."""
     sig_cols = []
     for t in range(n_tables):
         rng = np.random.default_rng(0x5EED_0003 + 7919 * t)
@@ -151,14 +153,9 @@ def lsh_topk(
         for bcol in bits[1:]:
             sig = sig + bcol
         sig_cols.append(sig.cast("long").alias(f"_b{t}"))
-    # Narrow signature table (id + n_tables longs) feeds both join sides.
-    # With a caller-owned scope the dot-product projection materializes
-    # once and the caller unpersists after its consuming action; without
-    # one nothing is cached (leak-free default — the projection is
-    # recomputed per side, still a single scan each).
-    sigs = df.select(F.col(id_col), *sig_cols)
-    if scope is not None:
-        sigs = scope.cache(sigs)
+    # Narrow signature table (id + n_tables longs): the dot-product
+    # projection runs once for all of its consumers.
+    sigs = IO.checkpoint(df.select(F.col(id_col), *sig_cols))
     entries = F.array(
         *[
             F.struct(
@@ -330,7 +327,6 @@ def ivf_topk(
     cell_cap: int = 4096,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    scope: "CacheScope | None" = None,
 ) -> DataFrame:
     """IVF-flat approximate top-k: the data-ADAPTIVE counterpart to
     :func:`lsh_topk` (centroids follow the corpus's density, so cells
@@ -353,8 +349,6 @@ def ivf_topk(
     probes = ivf_assignments(
         df, centroids, nprobe=nprobe, id_col=id_col, vec_col=vec_col
     )
-    if scope is not None:
-        probes = scope.cache(probes)
     assign = probes.filter(F.col("probe_rank") == 1)
     kept = (
         assign.groupBy("cell")

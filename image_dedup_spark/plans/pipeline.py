@@ -41,7 +41,6 @@ from image_dedup_spark.operators import (
 from image_dedup_spark.operators import (
     substring as SUB,
 )
-from image_dedup_spark.caching import CacheScope
 from image_dedup_spark.session import tune_for_corpus
 from image_dedup_spark.sources import io as IO
 
@@ -216,18 +215,9 @@ def run_pipeline(
         .select("doc_id", "url", "text", "fp.*"),
     )
 
-    # Candidate caches are scoped per stage and released as soon as the
-    # stage's own materialization finishes — nothing stays pinned across
-    # stages or past the pipeline.
-    def _near_pair_stage(name: str, build_with_scope):
-        with CacheScope() as scope:
-            return stage(name, lambda: build_with_scope(scope))
-
-    minhash_pairs = _near_pair_stage(
+    minhash_pairs = stage(
         "04_minhash_pairs",
-        lambda scope: LSH.minhash_dup_pairs(
-            fingerprints, cfg, mode=verify_mode, scope=scope
-        ),
+        lambda: LSH.minhash_dup_pairs(fingerprints, cfg, mode=verify_mode),
     )
     if sequential:
         # Reference-parity: cluster the exact+minhash evidence first,
@@ -254,14 +244,13 @@ def run_pipeline(
             "doc_id",
             "left_semi",
         )
-        simhash_pairs = _near_pair_stage(
+        simhash_pairs = stage(
             "06_simhash_pairs_sequential",
-            lambda scope: SB.simhash_dup_pairs(surv_a_fp, cfg, scope=scope),
+            lambda: SB.simhash_dup_pairs(surv_a_fp, cfg),
         )
     else:
-        simhash_pairs = _near_pair_stage(
-            "05_simhash_pairs",
-            lambda scope: SB.simhash_dup_pairs(fingerprints, cfg, scope=scope),
+        simhash_pairs = stage(
+            "05_simhash_pairs", lambda: SB.simhash_dup_pairs(fingerprints, cfg)
         )
 
     all_pairs = [exact_pairs, minhash_pairs, simhash_pairs]

@@ -9,9 +9,14 @@ would be a drop-in at deployment — the runtime here has no Iceberg jar,
 so parquet is the documented fallback) with an atomic ``_SUCCESS``
 marker; ``stage_exists`` gates resume.
 
-:func:`checkpoint` is the engine's only in-memory lineage cut (pipeline
-stages, connected-components rounds, merge batches), and
-:func:`row_count` is the one-job count that materializes it.
+:func:`checkpoint` is the engine's only in-memory lineage cut and its
+only materialization primitive: pipeline stages, connected-components
+rounds, merge batches, and the subtrees that several consumers inside
+one operator share (the LSH non-singleton band table, the ANN signature
+table). A pin's blocks live until Spark's ContextCleaner frees them,
+once the DataFrame reading them is garbage-collected; no caller owns a
+release. :func:`row_count` is the one-job count that materializes a
+stage.
 """
 
 from __future__ import annotations

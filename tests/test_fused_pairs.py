@@ -1,17 +1,16 @@
 """Fused ≡ separate near-dup pair parity.
 
 bench.py runs both near-dup families (MinHash/LSH + SimHash) in ONE
-Spark action over a shared fingerprint scan and a SHARED CacheScope
-(q_dup_pairs), while the oracle-checked queries() entries materialize
-each family separately. The fusion must be a pure job-submission
-optimization: the emitted pair SET has to be exactly the union of the
-two families' sets, or the bench would measure a different computation
-than the one the oracles verify.
+Spark action over a shared fingerprint scan (q_dup_pairs), while the
+oracle-checked queries() entries materialize each family separately.
+The fusion must be a pure job-submission optimization: the emitted
+pair SET has to be exactly the union of the two families' sets, or the
+bench would measure a different computation than the one the oracles
+verify.
 """
 
 import pyspark.sql.functions as F
 
-from image_dedup_spark.caching import CacheScope
 from image_dedup_spark.config import DEFAULT
 from image_dedup_spark.operators import exact as EX
 from image_dedup_spark.operators import lsh as LSH
@@ -25,27 +24,22 @@ def _pairset(df):
 def test_fused_pair_job_equals_union_of_families(spark, fingerprints):
     fp = EX.survivors(fingerprints).cache()
 
-    # separate: each family is its own action with its own scope —
-    # exactly the shape of the driver's oracle queries.
-    with CacheScope() as scope:
-        mh = _pairset(
-            LSH.minhash_dup_pairs(fp, DEFAULT, mode="estimate", scope=scope)
-            .localCheckpoint(eager=True)
-        )
-    with CacheScope() as scope:
-        sh = _pairset(
-            SB.simhash_dup_pairs(fp, DEFAULT, scope=scope).localCheckpoint(
-                eager=True
-            )
-        )
+    # separate: each family is its own action — exactly the shape of
+    # the driver's oracle queries.
+    mh = _pairset(
+        LSH.minhash_dup_pairs(fp, DEFAULT, mode="estimate")
+        .localCheckpoint(eager=True)
+    )
+    sh = _pairset(
+        SB.simhash_dup_pairs(fp, DEFAULT).localCheckpoint(eager=True)
+    )
 
-    # fused: one action, one shared scope — bench.py's q_dup_pairs.
-    with CacheScope() as scope:
-        fused = _pairset(
-            LSH.minhash_dup_pairs(fp, DEFAULT, mode="estimate", scope=scope)
-            .unionByName(SB.simhash_dup_pairs(fp, DEFAULT, scope=scope))
-            .localCheckpoint(eager=True)
-        )
+    # fused: one action — bench.py's q_dup_pairs.
+    fused = _pairset(
+        LSH.minhash_dup_pairs(fp, DEFAULT, mode="estimate")
+        .unionByName(SB.simhash_dup_pairs(fp, DEFAULT))
+        .localCheckpoint(eager=True)
+    )
 
     assert mh, "fixture must plant minhash near-dups"
     assert sh, "fixture must plant simhash near-dups"
