@@ -42,6 +42,7 @@ from image_dedup_spark.operators import crosscorpus as XC
 from image_dedup_spark.operators import repetition as REP
 from image_dedup_spark.operators import webcrawl as WC
 from image_dedup_spark.plans.pipeline import run_pipeline
+from image_dedup_spark.sources import io as IO
 
 # ---------------------------------------------------------------------------
 # shared fragments
@@ -78,18 +79,16 @@ def _suffix() -> F.Column:
 
 def _fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     udf = make_fingerprint_udf(DEFAULT)
-    return (
+    # The LSH/verify consumers reference this subtree up to 5x in one
+    # plan (.explain showed 5 ArrowEvalPython nodes): pin the Arrow UDF
+    # pass behind the engine's one lineage cut so it runs once. Its
+    # blocks are filled by the first consumer's job and freed by the
+    # ContextCleaner once the returned DataFrame is garbage-collected,
+    # so repeated query builds pin nothing for the session's lifetime.
+    return IO.checkpoint(
         _docs(spark, sf_dir)
         .select("doc_id", "text", udf(F.col("text")).alias("fp"))
         .select("doc_id", "text", "fp.*")
-        # The LSH/verify consumers reference this subtree up to 5x in one
-        # plan (.explain showed 5 ArrowEvalPython nodes): materialize the
-        # Arrow UDF pass once. localCheckpoint rather than cache() — its
-        # blocks are released by the ContextCleaner when the returned
-        # DataFrame is garbage-collected, so repeated query builds don't
-        # pin InMemoryRelations for the session's lifetime (round-2
-        # judge finding: every .cache() needs an owner).
-        .localCheckpoint(eager=True)
     )
 
 
@@ -989,7 +988,7 @@ def q_cdc_substring_pairs(spark, sf_dir):
     # materialize the chunk inventory once: the pair join references it
     # ~4x (freq filter + both join sides) and the per-position md5
     # expressions are the dominant cost of this oracle-checkable variant
-    ch = SUB.sql_chunk_table(_docs(spark, sf_dir), DEFAULT).localCheckpoint()
+    ch = IO.checkpoint(SUB.sql_chunk_table(_docs(spark, sf_dir), DEFAULT))
     return SUB.chunk_pairs(ch, DEFAULT)
 
 
@@ -1034,7 +1033,7 @@ def q_chunk_run_spans(spark, sf_dir):
     pure-DataFrame span path that scales without per-group suffix
     arrays. Spans quantized to chunk boundaries; best record per pair
     kept atomically (struct max)."""
-    ch = SUB.sql_chunk_table(_docs(spark, sf_dir), DEFAULT).localCheckpoint()
+    ch = IO.checkpoint(SUB.sql_chunk_table(_docs(spark, sf_dir), DEFAULT))
     out = SUB.chunk_run_spans(ch, DEFAULT)
     return out.select(
         "src_id",

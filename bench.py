@@ -36,6 +36,7 @@ from image_dedup_spark.operators import similarity as SIM
 from image_dedup_spark.operators import simhash_block as SB
 from image_dedup_spark.operators import substring as SUB
 from image_dedup_spark.session import get_spark, tune_for_corpus
+from image_dedup_spark.sources import io as IO
 
 
 def _git_sha() -> str:
@@ -53,6 +54,14 @@ def _git_sha() -> str:
         ).stdout.strip() or "unknown"
     except Exception:
         return "unknown"
+
+
+def _pinned(df):
+    """``df`` behind the engine's lineage cut, materialized now (one
+    job), so a timed query pays for its own rows."""
+    df = IO.checkpoint(df)
+    IO.row_count(df)
+    return df
 
 
 def main() -> None:
@@ -105,9 +114,7 @@ def main() -> None:
         # the block store for nothing (measured at 1M docs pinned: the
         # exact stage ran ~18s at BOTH 2 and 8 cores — a pure serial +
         # DRAM-bandwidth floor, per-stage efficiency 0.24).
-        return EX.labels(docs.select("doc_id", "text")).localCheckpoint(
-            eager=True
-        )
+        return _pinned(EX.labels(docs.select("doc_id", "text")))
 
     exact_labels = timed("q_exact_dedup", _exact)
     exact_surv = EX.survivors_from_labels(
@@ -136,14 +143,14 @@ def main() -> None:
     fp = spark.read.parquet(fp_path)
 
     # Both near-dup pair families in ONE action — shared fingerprint
-    # scan, one job submission, one localCheckpoint — so the per-stage
+    # scan, one job submission, one lineage cut — so the per-stage
     # fixed floor (~9s of job-submission/AQE/barrier cost per action
     # measured in BENCH/ANALYSIS_r2.md) is paid once, not twice.
     def _near_pairs():
-        return (
-            LSH.minhash_dup_pairs(fp, DEFAULT, mode="estimate")
-            .unionByName(SB.simhash_dup_pairs(fp, DEFAULT))
-            .localCheckpoint(eager=True)
+        return _pinned(
+            LSH.minhash_dup_pairs(fp, DEFAULT, mode="estimate").unionByName(
+                SB.simhash_dup_pairs(fp, DEFAULT)
+            )
         )
 
     near_pairs = timed("q_dup_pairs", _near_pairs)
@@ -163,13 +170,15 @@ def main() -> None:
         # docs=None: exact_labels has one row per corpus doc, so the
         # cluster table derives from it directly — no corpus-sized
         # docs-join-back (components.assign_clusters_via_labels).
-        lambda: CC.assign_clusters_via_labels(
-            None,
-            exact_labels,
-            near_pairs,
-            DEFAULT,
-            metrics_out=cc_probes,
-        ).localCheckpoint(eager=True),
+        lambda: _pinned(
+            CC.assign_clusters_via_labels(
+                None,
+                exact_labels,
+                near_pairs,
+                DEFAULT,
+                metrics_out=cc_probes,
+            )
+        ),
     )
     n_clusters = clusters.filter(F.col("is_representative")).count()
 
@@ -187,9 +196,9 @@ def main() -> None:
         spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         .select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
         .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint(eager=True)
     )
-    n_emb = emb.count()
+    emb = IO.checkpoint(emb)
+    n_emb = IO.row_count(emb)
     # dim is the embeddings-table contract (TESTDATA.md fixed-width
     # vectors); probing a data row for it would be a driver action inside
     # query construction. n_planes scales with the corpus so bucket

@@ -20,11 +20,21 @@ threshold (:func:`_broadcast_if_fits`, which also gates the assign
 join). Lineage is truncated every round with the engine's one lineage
 cut, ``sources.io.checkpoint`` (reliable ``checkpoint()`` when the
 SparkContext has a checkpoint dir, a lazy ``localCheckpoint``
-otherwise), plus a statistics reset (:func:`_truncate_lineage`); the
-convergence probe (counts of changed and moved labels, computed inside
-the round's own aggregation) rides the job that fills the lazy
-checkpoint. No driver-side graph materialization ever happens beyond
-the bounded broadcasts.
+otherwise); the convergence probe (counts of changed and moved labels,
+computed inside the round's own aggregation) rides the job that fills
+the lazy checkpoint. No driver-side graph materialization ever happens
+beyond the bounded broadcasts.
+
+A checkpoint keeps its origin plan's size estimate, so each round's
+label table inherits the estimate of the plan that built it. One round
+multiplies it by a bounded factor (the pinned edge table's estimate
+enters once, through the offer join), so its decimal length grows by a
+fixed amount per round
+(``tests/test_components.py::test_cc_size_estimate_grows_linearly``).
+A pointer jump that read the previous round's table instead of the
+round's own aggregate would square it every round (245k digits after
+15 rounds on that test's 200-vertex graph), until Catalyst's stats
+visitor stalls in BigInteger multiplication.
 """
 
 from __future__ import annotations
@@ -33,49 +43,12 @@ import re
 import time
 
 import pandas as pd
-from py4j.protocol import Py4JError, Py4JJavaError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from image_dedup_spark.config import DEFAULT, DedupConfig
 from image_dedup_spark.session import drop_zip_finders
 from image_dedup_spark.sources import io as IO
-
-
-def _truncate_lineage(df: DataFrame) -> DataFrame:
-    """Cut `df`'s lineage (:func:`sources.io.checkpoint`: reliable with a
-    checkpoint dir, lazy local otherwise — every caller here runs an
-    aggregation over the result right away, which fills the blocks in
-    that same job) and give the result fresh (default) statistics.
-
-    Stats reset: Dataset.checkpoint/localCheckpoint keep the origin plan's
-    sizeInBytes estimate in the truncated LogicalRDD. In a loop whose
-    round plan joins the previous checkpoint several times those estimates
-    COMPOUND round over round (join stats are the product of child sizes),
-    growing the BigInt ~5x in bit length per round, until Catalyst's stats
-    visitor spends minutes in BigInteger.multiplyToomCook3 on a 200-vertex
-    graph. Re-wrapping the SAME internal RDD (zero-copy, no job) resets
-    the stat to the constant-size default, which is decision-equivalent:
-    every small-side broadcast in the loop is either explicit
-    (``F.broadcast``) or made by AQE from runtime shuffle sizes. Pipeline
-    stages keep their statistics (``IO.checkpoint`` alone): there the
-    estimates do not compound, and they drive static broadcasts."""
-    spark = df.sparkSession
-    df = IO.checkpoint(df)
-    jdf = df._jdf
-    rdd, schema = jdf.queryExecution().toRdd(), jdf.schema()
-    try:
-        new_jdf = spark._jsparkSession.internalCreateDataFrame(rdd, schema, False)
-    except Py4JJavaError:
-        raise
-    except (AttributeError, Py4JError) as exc:
-        raise RuntimeError(
-            "SparkSession.internalCreateDataFrame is missing from this Spark "
-            "build; connected_components needs it to reset checkpoint "
-            "statistics, without which join-size estimates compound every "
-            "round and the label loop stalls in BigInteger multiplication"
-        ) from exc
-    return DataFrame(new_jdf, spark)
 
 
 _UNIT_SHIFT = {"": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
@@ -158,7 +131,7 @@ def _label_loop(
     # effect, so edge pinning + label init + first probe are ONE job
     # submission instead of three (the ~9s/stage fixed floor measured in
     # BENCH/ANALYSIS_r2.md was mostly these serial barriers).
-    e = _truncate_lineage(
+    e = IO.checkpoint(
         edges.select(F.col("src_id").alias("a"), F.col("dst_id").alias("b"))
         .unionByName(
             edges.select(F.col("dst_id").alias("a"), F.col("src_id").alias("b"))
@@ -170,7 +143,7 @@ def _label_loop(
     # small near-dup clumps), so most vertices are already converged
     # after this; `changed` vs the implicit self-label init seeds the
     # first round's offers.
-    labels = _truncate_lineage(
+    labels = IO.checkpoint(
         e.groupBy(F.col("a").alias("doc_id"))
         .agg(F.min("b").alias("min_nbr"))
         .select(
@@ -263,7 +236,7 @@ def _label_loop(
         # aggregation computes the round's labels, persisting them as
         # the checkpoint blocks the next round reads.
         t_ckpt = time.monotonic()
-        labels = _truncate_lineage(labels)
+        labels = IO.checkpoint(labels)
         ckpt_wall = round(time.monotonic() - t_ckpt, 3)
         n_changed, n_moved = probe(labels, it, "full")
         if metrics_out is not None:

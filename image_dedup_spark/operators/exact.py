@@ -3,9 +3,9 @@
 Reference semantics (/root/reference/samples.cpp:476-493,
 dedup_by_identical_hash): identical hash ⇒ keep the FIRST occurrence in
 input order, drop the rest. Spark has no implicit row order, so "first"
-is the materialized ``doc_id`` (assigned at ingest), and keep-first is a
-``row_number() over (partition by key order by doc_id)`` — one shuffle
-on the hash key, map-side-combinable, no UDF.
+is the materialized ``doc_id`` (assigned at ingest), and keep-first is
+``min(doc_id) over (partition by key)`` (:func:`labels`) — one shuffle
+of slim (key, id) rows on the hash key, no UDF.
 
 The reference instantiates this for md5 (D9, samples.cpp:342-344) and as
 the cardinality-reduction prelude to every near-dedup pass
@@ -23,34 +23,6 @@ from image_dedup_spark.functions import text as TXT
 def exact_key(col: Column) -> Column:
     """Exact-content key: md5 of normalized text (P2 analogue)."""
     return TXT.doc_fingerprint(col)
-
-
-def _keepers(keyed: DataFrame, order: str) -> DataFrame:
-    """(exact_key, min(order)) — the keep-first winners. A groupBy/min is
-    map-side combinable, so only slim (key, id) pairs ever shuffle; the
-    wide input rows are then matched back with a semi-join that Catalyst
-    broadcasts when the keeper table is small and sort-merges otherwise.
-    Strictly cheaper than a window over the wide rows (which must shuffle
-    every payload column through the partitionBy exchange)."""
-    return keyed.groupBy("exact_key").agg(F.min(order).alias(order))
-
-
-def survivors(
-    df: DataFrame, key_col: Column | None = None, order: str = "doc_id"
-) -> DataFrame:
-    """Keep-first exact dedup. Adds ``exact_key``; drops later occurrences.
-
-    Shape: the md5+normalize key is computed ONCE, over a slim
-    (key, order) projection; keepers aggregate that, and the wide rows
-    are matched back by an inner join on ``order`` alone — which also
-    re-attaches ``exact_key`` from the keeper row for free. The round-1
-    semi-join on (exact_key, order) made both join branches evaluate
-    the regex-normalize+md5 subtree over the full corpus (2× the
-    stage's dominant CPU; keep-first semantics identical either way
-    since ``order`` is unique per row)."""
-    key_col = exact_key(F.col("text")) if key_col is None else key_col
-    keyed_slim = df.select(F.col(order), key_col.alias("exact_key"))
-    return df.join(_keepers(keyed_slim, order), order, "inner")
 
 
 def labels(
@@ -87,20 +59,36 @@ def survivors_from_labels(
     df: DataFrame, lab: DataFrame, order: str = "doc_id"
 ) -> DataFrame:
     """Keep-first survivors (df columns + exact_key) from a :func:`labels`
-    table — same output as :func:`survivors`, zero additional md5 passes."""
+    table: its keeper rows joined back to ``df`` by ``order``, with no
+    further md5 pass."""
     winners = lab.filter(F.col(order) == F.col("keeper")).select(
         F.col(order), "exact_key"
     )
     return df.join(winners, order, "inner")
 
 
+def survivors(
+    df: DataFrame, key_col: Column | None = None, order: str = "doc_id"
+) -> DataFrame:
+    """Keep-first exact dedup. Adds ``exact_key``; drops later occurrences:
+    :func:`survivors_from_labels` over ``df``'s own :func:`labels`, so the
+    md5+normalize key is computed once, over a slim (key, order)
+    projection, and the wide rows are matched back by ``order``."""
+    return survivors_from_labels(df, labels(df, key_col, order), order)
+
+
 def dropped(
     df: DataFrame, key_col: Column | None = None, order: str = "doc_id"
 ) -> DataFrame:
-    """The complement of ``survivors`` (rows removed by exact dedup)."""
-    key_col = exact_key(F.col("text")) if key_col is None else key_col
-    keyed = df.withColumn("exact_key", key_col)
-    return keyed.join(_keepers(keyed, order), ["exact_key", order], "left_anti")
+    """The complement of :func:`survivors` (df columns + exact_key): the
+    rows whose ``order`` differs from their keeper's in the same
+    :func:`labels` table."""
+    losers = (
+        labels(df, key_col, order)
+        .filter(F.col(order) != F.col("keeper"))
+        .select(F.col(order), "exact_key")
+    )
+    return df.join(losers, order, "inner")
 
 
 def clusters(

@@ -78,15 +78,13 @@ def _local_dir() -> str:
 def get_spark(
     app_name: str = "image_dedup_spark",
     cores: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
     cores=None → ``local[$SPARK_GRAFT_CPUS or *]``. Shuffle partitions
-    default to max(2*cores, 8) so map-side combine output stays balanced
-    without tiny-task overhead; on a real cluster this would scale with
-    executor count instead.
+    are max(32*cores, 64), coalesced down per stage by AQE; on a real
+    cluster this would scale with executor count instead.
     """
     if cores is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -95,16 +93,15 @@ def get_spark(
     else:
         master = f"local[{cores}]"
         ncores = cores
-    if shuffle_partitions is None:
-        # High initial count, AQE coalesces DOWN per stage: AQE never
-        # SPLITS a uniformly-large partition (skew-join splitting needs
-        # a 5x-median outlier), so with 2*cores partitions the 5M-doc
-        # verify join ran 850MB-3.4GB sort partitions that spilled; at
-        # 32*cores they start ~50-200MB and small stages still coalesce
-        # to ~one partition per core (advisory 16MB, parallelismFirst).
-        # Cluster analogue: set this to a few x total cores and rely on
-        # the same AQE coalescing.
-        shuffle_partitions = max(32 * ncores, 64)
+    # High initial count, AQE coalesces DOWN per stage: AQE never
+    # SPLITS a uniformly-large partition (skew-join splitting needs a
+    # 5x-median outlier), so with 2*cores partitions the 5M-doc verify
+    # join ran 850MB-3.4GB sort partitions that spilled; at 32*cores
+    # they start ~50-200MB and small stages still coalesce to ~one
+    # partition per core (advisory 16MB, parallelismFirst). Cluster
+    # analogue: set this to a few x total cores and rely on the same AQE
+    # coalescing.
+    shuffle_partitions = max(32 * ncores, 64)
 
     builder = (
         SparkSession.builder.master(master)

@@ -87,7 +87,13 @@ def checkpoint(df: DataFrame) -> DataFrame:
     stages under it run now, and the caller's next job (a
     :func:`row_count`, or an aggregation over the result) computes the
     final stage and persists its blocks in that same job — one driver
-    barrier instead of two. The origin plan's statistics are kept."""
+    barrier instead of two.
+
+    The result keeps the origin plan's statistics (Spark offers no public
+    way to drop them), so static broadcast choices downstream still see
+    a size. A loop that cuts every round therefore carries its estimate
+    forward: it must grow the estimate by a bounded factor per round and
+    never square it (connected components, ``operators/components.py``)."""
     if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=False)

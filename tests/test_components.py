@@ -9,7 +9,6 @@ import sys
 import tempfile
 
 import pyspark.sql.functions as F
-import pytest
 
 from image_dedup_spark.operators import components as CC
 
@@ -252,26 +251,35 @@ def test_cc_output_type_matches_input_even_when_narrowed(spark):
     }
 
 
-def test_stats_reset_fails_fast_without_internal_create_dataframe(
-    spark, monkeypatch
-):
-    """The checkpoint stats reset depends on a private JVM method; if a
-    Spark build drops it, the CC loop must refuse with an error naming
-    the stats-compounding bug rather than fail obscurely (or hang)."""
-    df = spark.createDataFrame([(1, 2)], "src_id long, dst_id long")
-    real = spark._jsparkSession
-
-    class Drifted:
-        # a py4j call to a method the JVM does not have — the real
-        # failure mode of API drift ("Method ... does not exist")
-        internalCreateDataFrame = real.internalCreateDataFrameRemoved
-
-        def __getattr__(self, name):
-            return getattr(real, name)
-
-    monkeypatch.setattr(spark, "_jsparkSession", Drifted())
-    with pytest.raises(RuntimeError, match="internalCreateDataFrame.*compound"):
-        CC.connected_components(df).collect()
+def test_cc_size_estimate_grows_linearly(spark, tmp_path):
+    """Every lineage cut keeps its origin plan's size estimate, so the
+    label table's estimate carries from round to round. A round may
+    multiply it by a bounded factor (the pinned edge table's estimate)
+    but never square it: squaring doubles its digits every round until
+    Catalyst's stats visitor stalls in BigInteger multiplication. Parquet
+    input gives a real scan size (a few KB) to grow from."""
+    rng = random.Random(7)
+    edges = sorted(
+        {tuple(sorted(rng.sample(range(200), 2))) for _ in range(150)}
+    )
+    path = str(tmp_path / "edges")
+    spark.createDataFrame(edges, "src_id long, dst_id long").write.parquet(path)
+    probes = []
+    out = CC.connected_components(spark.read.parquet(path), metrics_out=probes)
+    rounds = sum(p["mode"] == "full" for p in probes)
+    assert rounds >= 5, probes  # enough rounds for squaring to show
+    # py4j hands the estimate over as a decimal string; a squared one
+    # exceeds Python's default int-conversion digit limit
+    limit = sys.get_int_max_str_digits()
+    sys.set_int_max_str_digits(0)
+    try:
+        size = out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        digits = len(str(size))
+    finally:
+        sys.set_int_max_str_digits(limit)
+    assert digits <= 25 * (rounds + 2), (rounds, digits)
+    got = {r.doc_id: r.cluster_id for r in out.collect()}
+    assert got == _comp_min_expect(edges)
 
 
 # Runs in its own interpreter: `local[N,F]` (F attempts per task) is a
