@@ -1180,9 +1180,7 @@ def q_near_remain_minhash(spark, sf_dir):
     srcs = [f"src{i}" for i in range(5)]
     src_fp = fp.filter(F.col("source").isin(srcs))
     gal_fp = fp.filter(~F.col("source").isin(srcs))
-    return XC.near_remain(
-        src_fp.select("doc_id"), src_fp, gal_fp, _MH32_CFG, broadcast_gallery=True
-    )
+    return XC.near_remain(src_fp.select("doc_id"), src_fp, gal_fp, _MH32_CFG)
 
 
 _MH32_MINS = ",\n  ".join(

@@ -11,19 +11,26 @@ component, the representative (survivor) is that min doc — mirroring
 keep-first. A reference-compatible greedy survivor mode with
 deterministic tie-breaks is provided for parity checks.
 
-Scale notes: every iteration has one shape — offers from the vertices
-whose label changed last round, a min-label groupBy, then a global
-pointer jump (large-star/small-star, Kiveris et al., SoCC 2014), so the
-round count is O(log n). The changed set is broadcast into the pinned
-edge table when the previous probe's count of it fits Spark's broadcast
-threshold (:func:`_broadcast_if_fits`, which also gates the assign
-join). Lineage is truncated every round with the engine's one lineage
-cut, ``sources.io.checkpoint`` (reliable ``checkpoint()`` when the
+Scale notes: a pair graph whose edge rows fit Spark's broadcast
+threshold by the engine's one byte rule (:func:`_rows_that_fit`, the
+same rule that gates every forced broadcast) is labelled on the driver:
+one bounded Arrow collect of the edges, then a numpy min-hook and
+pointer-jump labeller (:func:`_label_arrays`). The memory bound is one
+broadcast build side's, which Spark collects to the driver anyway.
+Above it, the labels come from a Spark loop in which every iteration
+has one shape — offers from the vertices whose label changed last
+round, a min-label groupBy, then a global pointer jump
+(large-star/small-star, Kiveris et al., SoCC 2014), so the round count
+is O(log n). The changed set is broadcast into the pinned edge table
+when the previous probe's count of it fits the threshold
+(:func:`_broadcast_if_fits`, which also gates the assign join). Lineage
+is truncated every round with the engine's one lineage cut,
+``sources.io.checkpoint`` (reliable ``checkpoint()`` when the
 SparkContext has a checkpoint dir, a lazy ``localCheckpoint``
 otherwise); the convergence probe (counts of changed and moved labels,
 computed inside the round's own aggregation) rides the job that fills
-the lazy checkpoint. No driver-side graph materialization ever happens
-beyond the bounded broadcasts.
+the lazy checkpoint. Both paths give the same rows, null endpoints
+included.
 
 A checkpoint keeps its origin plan's size estimate, so each round's
 label table inherits the estimate of the plan that built it. One round
@@ -42,9 +49,13 @@ from __future__ import annotations
 import re
 import time
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from image_dedup_spark.config import DEFAULT, DedupConfig
 from image_dedup_spark.session import drop_zip_finders
@@ -64,17 +75,22 @@ def _byte_size(text: str) -> int:
     return int(m.group(1)) << _UNIT_SHIFT[m.group(2)]
 
 
+def _rows_that_fit(spark: SparkSession, n_cols: int) -> int:
+    """Rows of ``n_cols`` long columns that fit under
+    ``spark.sql.autoBroadcastJoinThreshold`` by Spark's per-row size
+    estimate: an 8-byte row header plus 8 bytes per column, 24 B for two
+    columns, ~2.8M rows under the 64 MB :func:`session.get_spark` sets.
+    Negative when the threshold is negative (``-1``: never broadcast)."""
+    conf = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    return _byte_size(conf) // (8 + 8 * n_cols)
+
+
 def _broadcast_if_fits(df: DataFrame, n_rows: int) -> DataFrame:
     """``F.broadcast(df)`` when ``n_rows`` (a count the caller already
-    has) times Spark's per-row size estimate fits under
-    ``spark.sql.autoBroadcastJoinThreshold``, the limit Spark's planner
-    applies to its own statistics; otherwise ``df`` as is, so an
-    oversized build side degrades to a shuffle join instead of failing.
-    The estimate is an 8-byte row header plus 8 bytes per (long id)
-    column: 24 B for (doc_id, cluster_id), ~2.8M rows under the 64 MB
-    :func:`session.get_spark` sets."""
-    conf = df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    if n_rows * (8 + 8 * len(df.columns)) <= _byte_size(conf):
+    has) fits :func:`_rows_that_fit`, the limit Spark's planner applies
+    to its own statistics; otherwise ``df`` as is, so an oversized build
+    side degrades to a shuffle join instead of failing."""
+    if n_rows <= _rows_that_fit(df.sparkSession, len(df.columns)):
         return F.broadcast(df)
     return df
 
@@ -110,7 +126,9 @@ def connected_components(
 
     ``metrics_out``: optional list that receives one dict per probe
     barrier {"iteration", "seconds", "round_wall", "label_sum",
-    "changed", "moved", "converged", "mode"} (mode "warm" for the warm
+    "changed", "moved", "converged", "mode"} (mode "local" for a graph
+    labelled on the driver — its one entry, with "seconds" the edge
+    collect and "round_wall" the whole call; "warm" for the loop's warm
     start, "full" for every loop round; "moved" counts labels that differ
     from their doc_id), plus "ckpt_wall" on loop rounds — the bench uses
     it to separate real propagation work from barrier latency when
@@ -123,7 +141,11 @@ def _label_loop(
 ) -> tuple[DataFrame, int]:
     """:func:`connected_components`' labels, plus the last probe's count
     of their moved rows (cluster_id != doc_id), which gates the assign
-    join's broadcast at no extra job (:func:`_moved`)."""
+    join's broadcast at no extra job (:func:`_moved`). A graph that fits
+    the driver (:func:`_label_on_driver`) never reaches the loop."""
+    local = _label_on_driver(edges, metrics_out)
+    if local is not None:
+        return local
     # Pin the symmetrized edge table: every probe is its own Spark job,
     # and an unpinned `e` would replay the union shuffle each round
     # (shuffle reuse does not cross job boundaries). Lazy in local mode:
@@ -242,6 +264,106 @@ def _label_loop(
         if metrics_out is not None:
             metrics_out[-1]["ckpt_wall"] = ckpt_wall
     return labels.select("doc_id", "cluster_id"), n_moved
+
+
+def _label_on_driver(
+    edges: DataFrame, metrics_out: list | None
+) -> tuple[DataFrame, int] | None:
+    """:func:`_label_loop`'s result computed on the driver, or None when
+    the edge rows do not fit :func:`_rows_that_fit` (then the caller's
+    Spark loop runs). One job collects at most ``cap + 1`` edge rows as
+    Arrow; a full collect means the graph is over the cap and is
+    discarded. Ids stay int64 from Arrow to the output table, whose id
+    type is the loop's (the wider of the two endpoint types)."""
+    spark = edges.sparkSession
+    cap = _rows_that_fit(spark, 2)
+    if cap <= 0:
+        return None
+    t0 = time.monotonic()
+    ends = edges.select(F.col("src_id").alias("a"), F.col("dst_id").alias("b"))
+    table = ends.limit(cap + 1).toArrow()
+    if table.num_rows > cap:
+        return None
+    collect_s = time.monotonic() - t0
+    doc, cluster = _label_arrays(table.column("a"), table.column("b"))
+    id_type = ends.select(F.least("a", "b")).schema[0].dataType
+    comp = spark.createDataFrame(
+        pa.table({"doc_id": doc, "cluster_id": cluster}),
+        T.StructType(
+            [T.StructField("doc_id", id_type), T.StructField("cluster_id", id_type)]
+        ),
+    )
+    n_moved = int(pc.sum(pc.not_equal(doc, cluster)).as_py() or 0)
+    if metrics_out is not None:
+        labelled = pc.drop_null(cluster).to_numpy()
+        metrics_out.append(
+            {
+                "iteration": 0,
+                "seconds": round(collect_s, 3),
+                "round_wall": round(time.monotonic() - t0, 3),
+                # the loop probe's decimal(38,0) sum, printed the same
+                # way ("None" when no vertex has a label)
+                "label_sum": str(sum(labelled.tolist())) if len(labelled) else "None",
+                "changed": 0,
+                "moved": n_moved,
+                "converged": True,
+                "mode": "local",
+            }
+        )
+    return comp, n_moved
+
+
+def _label_arrays(a: pa.ChunkedArray, b: pa.ChunkedArray) -> tuple[pa.Array, pa.Array]:
+    """(doc_id, cluster_id) Arrow arrays labelling the graph whose edge
+    endpoints are ``a[i]``–``b[i]``: every vertex gets the min id of its
+    component, as the Spark loop computes it.
+
+    Vertex ids are compacted with ``np.unique`` (sorted, so the min id
+    of a component is its min index). Each pass hooks every tree root to
+    the min root across its open edges (``np.minimum.at``: a label only
+    falls and always stays an index of the same component, no larger
+    than its own), then pointer-jumps every label to its root. An edge
+    whose ends share a root never separates again, so it closes; labels
+    are uniform per component once no edge is open.
+
+    A null endpoint matches the loop: a non-null end is still a vertex
+    (its own label, when null is its only neighbour), no label crosses
+    a null, and one null vertex row appears whenever an edge has a null
+    end, labelled with the min label among its non-null neighbours (null
+    when it has none)."""
+    valid = np.concatenate(
+        [pc.is_valid(a).to_numpy(zero_copy_only=False),
+         pc.is_valid(b).to_numpy(zero_copy_only=False)]
+    )
+    ends = np.concatenate(
+        [pc.fill_null(a, 0).to_numpy(), pc.fill_null(b, 0).to_numpy()]
+    ).astype(np.int64, copy=False)
+    ids, inv = np.unique(ends[valid], return_inverse=True)
+    idx = np.full(len(ends), -1, dtype=np.int64)
+    idx[valid] = inv
+    ia, ib = idx[: len(a)], idx[len(a):]
+    whole = (ia >= 0) & (ib >= 0)
+    src = np.concatenate([ia[whole], ib[whole]])
+    dst = np.concatenate([ib[whole], ia[whole]])
+    label = np.arange(len(ids), dtype=np.int64)
+    while len(src):
+        np.minimum.at(label, label[src], label[dst])
+        while True:
+            jumped = label[label]
+            if np.array_equal(jumped, label):
+                break
+            label = jumped
+        open_ = label[src] != label[dst]
+        src, dst = src[open_], dst[open_]
+    doc, cluster = pa.array(ids), pa.array(ids[label])
+    if not valid.all():
+        # the null vertex; its neighbours are the valid ends of half-null edges
+        half = (ia >= 0) != (ib >= 0)
+        nbr = np.maximum(ia, ib)[half]
+        null_label = int(ids[label[nbr]].min()) if len(nbr) else None
+        doc = pa.concat_arrays([doc, pa.nulls(1, pa.int64())])
+        cluster = pa.concat_arrays([cluster, pa.array([null_label], pa.int64())])
+    return doc, cluster
 
 
 def _moved(comp: DataFrame, n_moved: int) -> DataFrame:

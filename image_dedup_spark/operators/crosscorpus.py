@@ -43,7 +43,14 @@ def near_dup_ids_vs_gallery(
 ) -> DataFrame:
     """doc_ids of src rows that near-duplicate (minhash-verified) at least
     one gallery row. The verify is the signature-estimate form so no
-    sketch shuffle crosses corpora."""
+    sketch shuffle crosses corpora.
+
+    The band join is left to Spark's planner, which broadcasts the
+    gallery band table when its estimate fits
+    ``spark.sql.autoBroadcastJoinThreshold`` and shuffles otherwise.
+    ``broadcast_gallery=True`` forces the broadcast with no size bound:
+    the whole gallery band table is collected to the driver and shipped
+    to every executor, however large it is."""
     # Band keys are xxhash64 over the signature slice, which hashes the
     # STORAGE type: two tables written under different minhash_bits
     # (array<smallint> vs array<int>) never band-collide even on equal

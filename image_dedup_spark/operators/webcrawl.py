@@ -99,9 +99,12 @@ def host_of(url: Column) -> Column:
     ``www.`` dropped, cut at the first ``/ : ? #`` — i.e. the host
     without port or path. The userinfo group excludes ``/?#`` so an
     ``@`` appearing later (in path or query) can never pull the match
-    forward."""
+    forward. An empty host stays empty (``http://:80/p``,
+    ``https://www.``): the host group may match nothing, so the regex
+    never backtracks into reading the scheme or the userinfo as the
+    host."""
     return F.regexp_extract(
-        F.lower(url), r"^(?:https?://)?(?:[^/?#@]*@)?(?:www\.)*([^/:?#]+)", 1
+        F.lower(url), r"^(?:https?://)?(?:[^/?#@]*@)?(?:www\.)*([^/:?#]*)", 1
     )
 
 

@@ -1,5 +1,8 @@
+from contextlib import contextmanager, nullcontext
+
 import pytest
 
+from image_dedup_spark.operators import components as CC
 from image_dedup_spark.session import get_spark
 
 
@@ -37,3 +40,21 @@ def fingerprints(spark, corpus):
     )
     fp.count()
     return fp
+
+
+@contextmanager
+def _loop_path():
+    """Shut the connected-components driver path: every graph takes the
+    Spark label loop, whatever its size."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(CC, "_label_on_driver", lambda edges, metrics_out: None)
+        yield
+
+
+@pytest.fixture(scope="session")
+def cc_paths():
+    """The two connected-components paths, each a context to run a
+    block under: ``"driver"`` as configured (a graph under the broadcast
+    threshold is labelled on the driver) and ``"loop"`` (the Spark loop
+    forced)."""
+    return {"driver": nullcontext, "loop": _loop_path}

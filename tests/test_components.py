@@ -38,7 +38,7 @@ def _comp_min_expect(edges):
     return {n: min(comp_min[root]) for n, root in oracle.items()}
 
 
-def test_connected_components_vs_union_find(spark):
+def test_connected_components_vs_union_find(spark, cc_paths):
     rng = random.Random(7)
     edges = sorted(
         {
@@ -47,12 +47,14 @@ def test_connected_components_vs_union_find(spark):
         }
     )
     df = spark.createDataFrame(edges, "src_id long, dst_id long")
-    got = {
-        r.doc_id: r.cluster_id
-        for r in CC.connected_components(df).collect()
-    }
-    # min-label means cluster_id == min node of the component
-    assert got == _comp_min_expect(edges)
+    for path, forced in cc_paths.items():
+        with forced():
+            got = {
+                r.doc_id: r.cluster_id
+                for r in CC.connected_components(df).collect()
+            }
+        # min-label means cluster_id == min node of the component
+        assert got == _comp_min_expect(edges), path
 
 
 def test_long_chain_converges(spark):
@@ -158,7 +160,7 @@ def test_greedy_survivors_mega_component_fallback(spark):
     assert out[100] != out[101]
 
 
-def test_frontier_rounds_used_and_correct(spark):
+def test_frontier_rounds_used_and_correct(spark, cc_paths):
     """30k isolated doc pairs converge at the warm start, plus one
     12-node chain whose propagation runs in rounds over a small changed
     set (broadcast into the edge table while its probed count fits
@@ -178,9 +180,10 @@ def test_frontier_rounds_used_and_correct(spark):
         [(i, i + 1) for i in range(12)], "src_id long, dst_id long"
     )
     probes = []
-    out = CC.connected_components(
-        pairs.unionByName(chain), metrics_out=probes
-    )
+    with cc_paths["loop"]():
+        out = CC.connected_components(
+            pairs.unionByName(chain), metrics_out=probes
+        )
     modes = [p["mode"] for p in probes]
     assert modes[0] == "warm" and set(modes) <= {"warm", "full"}, modes
     assert all("ckpt_wall" in p for p in probes if p["mode"] != "warm"), probes
@@ -226,32 +229,36 @@ def test_assign_via_labels_docs_none_matches_docs_join(spark):
     assert without == with_docs
 
 
-def test_cc_ids_beyond_int32_stay_64bit_and_correct(spark):
+def test_cc_ids_beyond_int32_stay_64bit_and_correct(spark, cc_paths):
     """Ids outside int32 (hash-derived / 10^12-scale) keep exact labels,
     and the output keeps the input id type."""
     big = 3_000_000_000  # > 2^31 - 1
     edges = [(big + 1, big + 2), (big + 2, big + 3), (5, 6), (big + 10, 7)]
     df = spark.createDataFrame(edges, "src_id long, dst_id long")
-    out = CC.connected_components(df)
-    assert dict(out.dtypes) == {"doc_id": "bigint", "cluster_id": "bigint"}
-    assert {r["doc_id"]: r["cluster_id"] for r in out.collect()} == {
-        big + 1: big + 1, big + 2: big + 1, big + 3: big + 1,
-        5: 5, 6: 5, big + 10: 7, 7: 7,
-    }
+    for path, forced in cc_paths.items():
+        with forced():
+            out = CC.connected_components(df)
+            assert dict(out.dtypes) == {"doc_id": "bigint", "cluster_id": "bigint"}, path
+            assert {r["doc_id"]: r["cluster_id"] for r in out.collect()} == {
+                big + 1: big + 1, big + 2: big + 1, big + 3: big + 1,
+                5: 5, 6: 5, big + 10: 7, 7: 7,
+            }, path
 
 
-def test_cc_output_type_matches_input_even_when_narrowed(spark):
+def test_cc_output_type_matches_input_even_when_narrowed(spark, cc_paths):
     """Small ids (which fit int32) still come back in the contract type,
     the input id type."""
     df = spark.createDataFrame([(1, 2), (2, 3)], "src_id long, dst_id long")
-    out = CC.connected_components(df)
-    assert dict(out.dtypes) == {"doc_id": "bigint", "cluster_id": "bigint"}
-    assert {r["doc_id"]: r["cluster_id"] for r in out.collect()} == {
-        1: 1, 2: 1, 3: 1
-    }
+    for path, forced in cc_paths.items():
+        with forced():
+            out = CC.connected_components(df)
+            assert dict(out.dtypes) == {"doc_id": "bigint", "cluster_id": "bigint"}, path
+            assert {r["doc_id"]: r["cluster_id"] for r in out.collect()} == {
+                1: 1, 2: 1, 3: 1
+            }, path
 
 
-def test_cc_size_estimate_grows_linearly(spark, tmp_path):
+def test_cc_size_estimate_grows_linearly(spark, cc_paths, tmp_path):
     """Every lineage cut keeps its origin plan's size estimate, so the
     label table's estimate carries from round to round. A round may
     multiply it by a bounded factor (the pinned edge table's estimate)
@@ -265,7 +272,8 @@ def test_cc_size_estimate_grows_linearly(spark, tmp_path):
     path = str(tmp_path / "edges")
     spark.createDataFrame(edges, "src_id long, dst_id long").write.parquet(path)
     probes = []
-    out = CC.connected_components(spark.read.parquet(path), metrics_out=probes)
+    with cc_paths["loop"]():
+        out = CC.connected_components(spark.read.parquet(path), metrics_out=probes)
     rounds = sum(p["mode"] == "full" for p in probes)
     assert rounds >= 5, probes  # enough rounds for squaring to show
     # py4j hands the estimate over as a decimal string; a squared one
@@ -290,8 +298,8 @@ from pyspark import TaskContext
 from image_dedup_spark.operators import components as CC
 from image_dedup_spark.session import drop_zip_finders, get_spark
 
-edges, marker_dir = json.loads(sys.argv[1]), sys.argv[2]
-spark = get_spark(cores=4, extra_conf={"spark.master": "local[4,3]"})
+edges, marker_dir, conf = json.loads(sys.argv[1]), sys.argv[2], json.loads(sys.argv[3])
+spark = get_spark(cores=4, extra_conf={"spark.master": "local[4,3]", **conf})
 df = spark.createDataFrame(edges, "src_id long, dst_id long")
 
 
@@ -304,16 +312,18 @@ def flaky(batches):
     yield from batches
 
 
-def labels(edge_df):
+def labels(edge_df, probes=None):
     return sorted(
         [r.doc_id, r.cluster_id]
-        for r in CC.connected_components(edge_df).collect()
+        for r in CC.connected_components(edge_df, metrics_out=probes).collect()
     )
 
 
+probes = []
 print(json.dumps({
     "clean": labels(df),
-    "retried": labels(df.mapInPandas(flaky, df.schema)),
+    "retried": labels(df.mapInPandas(flaky, df.schema), probes),
+    "first_mode": probes[0]["mode"],
 }))
 spark.stop()
 """
@@ -338,19 +348,29 @@ def _run_child(script: str, *args: str) -> dict:
 def test_cc_same_labels_under_task_retry():
     """A task of the CC edge input fails on its first attempt and Spark
     retries it (local[4,3]): the labels must equal the failure-free run
-    and the union-find oracle exactly."""
+    and the union-find oracle exactly. Two legs: the driver path, where
+    the failing task sits under the bounded Arrow collect, and the Spark
+    loop (a ``-1`` broadcast threshold shuts the driver path)."""
     rng = random.Random(41)
     edges = sorted(
         {tuple(sorted(rng.sample(range(400), 2))) for _ in range(250)}
         | {(i, i + 1) for i in range(500, 540)}
     )
-    with tempfile.TemporaryDirectory() as marker_dir:
-        out = _run_child(_RETRY_CHILD, json.dumps(edges), marker_dir)
-        # the injected failure really fired (else the test is vacuous)
-        assert os.listdir(marker_dir)
     expect = sorted([n, c] for n, c in _comp_min_expect(edges).items())
-    assert out["clean"] == expect
-    assert out["retried"] == expect
+    legs = {
+        "local": {},
+        "warm": {"spark.sql.autoBroadcastJoinThreshold": "-1"},
+    }
+    for first_mode, conf in legs.items():
+        with tempfile.TemporaryDirectory() as marker_dir:
+            out = _run_child(
+                _RETRY_CHILD, json.dumps(edges), marker_dir, json.dumps(conf)
+            )
+            # the injected failure really fired (else the test is vacuous)
+            assert os.listdir(marker_dir), first_mode
+        assert out["first_mode"] == first_mode
+        assert out["clean"] == expect, first_mode
+        assert out["retried"] == expect, first_mode
 
 
 # A checkpoint dir cannot be unset on a SparkContext, so the reliable
@@ -377,16 +397,28 @@ def clusters():
     return sorted([r.doc_id, r.cluster_id] for r in res.clusters.collect())
 
 
+def labels(edge_df):
+    return sorted(
+        [r.doc_id, r.cluster_id] for r in CC.connected_components(edge_df).collect()
+    )
+
+
 local = clusters()
 spark.sparkContext.setCheckpointDir(ckpt_dir)
 df = spark.createDataFrame(edges, "src_id long, dst_id long")
-labels = sorted(
-    [r.doc_id, r.cluster_id] for r in CC.connected_components(df).collect()
-)
+driver_labels = labels(df)
+files_after_driver = files_under(ckpt_dir)
+# the loop leg: the driver path shut, as the tests' cc_paths fixture does
+driver_path = CC._label_on_driver
+CC._label_on_driver = lambda edges, metrics_out: None
+loop_labels = labels(df)
+CC._label_on_driver = driver_path
 files_after_cc = files_under(ckpt_dir)
 reliable = clusters()
 print(json.dumps({
-    "labels": labels, "local": local, "reliable": reliable,
+    "driver_labels": driver_labels, "loop_labels": loop_labels,
+    "local": local, "reliable": reliable,
+    "files_after_driver": files_after_driver,
     "files_after_cc": files_after_cc,
     "files_after_pipeline": files_under(ckpt_dir),
 }))
@@ -396,9 +428,10 @@ spark.stop()
 
 def test_reliable_checkpoint_path_matches_local():
     """With ``sc.setCheckpointDir`` set, the lineage cut is a reliable
-    checkpoint: CC labels still equal union-find, and run_pipeline's
-    clusters equal the local-checkpoint run's. Both the CC loop and the
-    pipeline stages must really write checkpoint files."""
+    checkpoint: CC labels still equal union-find on both paths, and
+    run_pipeline's clusters equal the local-checkpoint run's. Both the
+    CC loop and the pipeline stages must really write checkpoint files;
+    the driver path writes none."""
     rng = random.Random(43)
     edges = sorted(
         {tuple(sorted(rng.sample(range(300), 2))) for _ in range(200)}
@@ -407,7 +440,9 @@ def test_reliable_checkpoint_path_matches_local():
     with tempfile.TemporaryDirectory() as ckpt_dir:
         out = _run_child(_RELIABLE_CHILD, json.dumps(edges), ckpt_dir)
     expect = sorted([n, c] for n, c in _comp_min_expect(edges).items())
-    assert out["labels"] == expect
+    assert out["driver_labels"] == expect
+    assert out["loop_labels"] == expect
+    assert out["files_after_driver"] == 0
     assert out["files_after_cc"] > 0
     assert out["files_after_pipeline"] > out["files_after_cc"]
     assert out["local"] and out["reliable"] == out["local"]

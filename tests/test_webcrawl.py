@@ -1,10 +1,14 @@
 """Crawl-identity operators (operators/webcrawl.py) and repetition /
 boilerplate signals (operators/repetition.py)."""
 
+import re
 from collections import Counter
+from urllib.parse import urlsplit
 
 import pyspark.sql.functions as F
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from image_dedup_spark.operators import repetition as REP
 from image_dedup_spark.operators import webcrawl as WC
@@ -87,6 +91,10 @@ HOST_CASES = [
     ("user:pw@g.example.com:8080/p", "g.example.com"),
     # '@' later in the path is not userinfo
     ("https://h.example.com/u/@handle", "h.example.com"),
+    # an empty host stays empty; the scheme or userinfo is not read as one
+    ("http://:80/p", ""),
+    ("https://user@/p", ""),
+    ("https://www.", ""),
 ]
 
 
@@ -368,6 +376,76 @@ def test_normalize_url_never_leaves_utm_or_scheme(spark):
         assert "utm_" not in n and "#" not in n, n
         assert not n.startswith(("http://", "https://", "www.")), n
         assert not n.endswith(("?", "&", "/")), n
+
+
+# Generated http(s) urls: any-case scheme, optional userinfo, stacked
+# `www.` prefixes, hosts whose labels may themselves be `www` (or no
+# host at all), any port, and paths, queries and fragments over the RFC 3986 character
+# classes (with %-escapes, tracking and empty params, `/` and `?`
+# inside the query).
+_ALNUM = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789"
+_SUB_DELIMS = "!$'()*+,;="
+_escape = st.sampled_from(["%3a", "%3A", "%2f", "%2F", "%25", "%", "%zz"])
+
+
+def _chars(extra):
+    return st.lists(
+        st.one_of(st.sampled_from(_ALNUM + "-._~" + extra), _escape), max_size=6
+    ).map("".join)
+
+
+_label = st.one_of(st.just("www"), st.text(_ALNUM + "-", min_size=1, max_size=6))
+_param = st.tuples(
+    st.sampled_from(["id", "q", "utm_source", "utm_id2", "Utm_X", ""]),
+    st.one_of(st.none(), _chars(_SUB_DELIMS.replace("&", "") + ":@/?")),
+).map(lambda kv: kv[0] if kv[1] is None else f"{kv[0]}={kv[1]}")
+http_urls = st.builds(
+    lambda scheme, user, www, labels, port, segs, params, frag: (
+        scheme + user + www + ".".join(labels) + port
+        + "".join("/" + s for s in segs)
+        + ("" if params is None else "?" + "&".join(params))
+        + ("" if frag is None else "#" + frag)
+    ),
+    st.sampled_from(["http://", "https://", "HTTP://", "Https://"]),
+    st.one_of(st.just(""), _chars(_SUB_DELIMS + ":").map(lambda u: u + "@")),
+    st.sampled_from(["", "www.", "WWW.", "www.www."]),
+    st.lists(_label, max_size=4),
+    st.one_of(st.just(""), st.sampled_from([":80", ":443", ":"]),
+              st.integers(0, 99999).map(lambda p: f":{p}")),
+    st.lists(_chars(_SUB_DELIMS + ":@"), max_size=4),
+    st.one_of(st.none(), st.lists(_param, max_size=4)),
+    st.one_of(st.none(), _chars(_SUB_DELIMS + ":@/?#")),
+)
+_url_settings = settings(
+    max_examples=25, deadline=None, suppress_health_check=[HealthCheck.too_slow]
+)
+
+
+def _apply(spark, urls, fn):
+    df = spark.createDataFrame([(i, u) for i, u in enumerate(urls)], "i long, url string")
+    out = df.select("i", fn(F.col("url")).alias("o")).collect()
+    return [r["o"] for r in sorted(out, key=lambda r: r["i"])]
+
+
+@_url_settings
+@given(urls=st.lists(http_urls, min_size=1, max_size=40))
+def test_normalize_url_idempotent_on_generated_urls(spark, urls):
+    """normalize_url is a projection over generated http(s) urls."""
+    once = _apply(spark, urls, WC.normalize_url)
+    twice = _apply(spark, once, WC.normalize_url)
+    bad = [(u, a, b) for u, a, b in zip(urls, once, twice) if a != b]
+    assert bad == [], bad[:5]
+
+
+@_url_settings
+@given(urls=st.lists(http_urls, min_size=1, max_size=40))
+def test_host_of_matches_urlsplit_hostname(spark, urls):
+    """host_of equals ``urlsplit(url).hostname`` with its leading
+    ``www.`` labels stripped, as host_of strips them."""
+    got = _apply(spark, urls, WC.host_of)
+    want = [re.sub(r"^(?:www\.)+", "", urlsplit(u).hostname or "") for u in urls]
+    bad = [(u, g, w) for u, g, w in zip(urls, got, want) if g != w]
+    assert bad == [], bad[:5]
 
 
 def test_latest_capture_matches_python_oracle(spark):
