@@ -18,12 +18,16 @@ from image_dedup_spark.config import DEFAULT, DedupConfig
 
 
 def with_reject_reason(df: DataFrame, cfg: DedupConfig = DEFAULT) -> DataFrame:
+    # a null column reads as empty, so null text is too short, null lang
+    # a bad language and null html malformed (a bare ``isin`` or
+    # ``startswith`` on null is null, which would keep the row)
     text = F.coalesce(F.col("text"), F.lit(""))
-    html_s = F.col("html").cast("string")
+    lang = F.coalesce(F.col("lang"), F.lit(""))
+    html_s = F.coalesce(F.col("html").cast("string"), F.lit(""))
     reason = (
         F.when(F.length(text) < cfg.min_text_chars, F.lit("text_too_short"))
         .when(F.length(text) > cfg.max_text_chars, F.lit("text_too_long"))
-        .when(~F.col("lang").isin(*cfg.lang_whitelist), F.lit("bad_lang"))
+        .when(~lang.isin(*cfg.lang_whitelist), F.lit("bad_lang"))
         .when(
             ~(
                 html_s.startswith("<html>")

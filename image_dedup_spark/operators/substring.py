@@ -11,9 +11,10 @@ either doc. Chunks between consecutive anchors are hashed; two docs
 sharing >= cfg.cdc_min_span bytes of chunk-identical content are
 substring-duplicate candidates.
 
-The chunker is one vectorized Arrow UDF (numpy sliding windows); chunk
-matching is plain explode → groupBy → pair aggregation — all shuffles
-on chunk hashes, which is how it scales.
+The chunker is one ``mapInPandas`` over (doc_id, text) that yields the
+flat chunk rows (numpy sliding windows per doc), pinned so every
+consumer reads one computation of it; chunk matching is groupBy → pair
+aggregation — all shuffles on chunk hashes, which is how it scales.
 """
 
 from __future__ import annotations
@@ -23,25 +24,15 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from image_dedup_spark.config import DEFAULT, DedupConfig
 from image_dedup_spark.functions.fingerprints import splitmix64
 from image_dedup_spark.session import drop_zip_finders
+from image_dedup_spark.sources import io as IO
 
 _U64 = np.uint64
-
-CHUNK_SCHEMA = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("chunk_hash", T.LongType(), False),
-            T.StructField("pos", T.IntegerType(), False),
-            T.StructField("length", T.IntegerType(), False),
-        ]
-    )
-)
 
 
 def _window_hashes(b: bytes, w: int) -> np.ndarray:
@@ -80,24 +71,38 @@ def cdc_chunks(text: str, cfg: DedupConfig = DEFAULT) -> list[tuple[int, int, in
     return out
 
 
-def make_cdc_udf(cfg: DedupConfig = DEFAULT):
-    def _compute(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        drop_zip_finders()
-        for texts in it:
-            yield pd.Series([cdc_chunks(t or "", cfg) for t in texts])
-
-    return F.pandas_udf(_compute, CHUNK_SCHEMA)
-
-
 def chunk_table(
     docs: DataFrame, cfg: DedupConfig = DEFAULT, id_col: str = "doc_id"
 ) -> DataFrame:
-    """(doc_id, chunk_hash, pos, length) — exploded chunk inventory."""
-    udf = make_cdc_udf(cfg)
-    return (
-        docs.select(F.col(id_col).alias("doc_id"), udf(F.col("text")).alias("ch"))
-        .select("doc_id", F.explode("ch").alias("c"))
-        .select("doc_id", "c.chunk_hash", "c.pos", "c.length")
+    """(doc_id, chunk_hash, pos, length): one row per :func:`cdc_chunks`
+    chunk of every doc (a null text has none), pinned with
+    :func:`image_dedup_spark.sources.io.checkpoint`.
+
+    One ``mapInPandas`` yields the flat rows, so each task runs one
+    Python worker and each doc meets the chunker once. (A ``pandas_udf``
+    returning the chunk array under ``explode`` would run it twice per
+    task: Spark infers ``size(ch) > 0`` below the Generate and evaluates
+    it in a second, chained Arrow UDF.) The pin keeps it to once per
+    call: the consumers (the shared-chunk count and join, the pair
+    expansion) prune different columns, so exchange reuse cannot share
+    them."""
+
+    def _chunk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
+        for pdf in batches:
+            rows = [
+                (d, *c)
+                for d, t in zip(pdf["doc_id"], pdf["text"])
+                for c in cdc_chunks(t or "", cfg)
+            ]
+            yield pd.DataFrame(
+                rows, columns=["doc_id", "chunk_hash", "pos", "length"]
+            )
+
+    return IO.checkpoint(
+        docs.select(F.col(id_col).alias("doc_id"), "text").mapInPandas(
+            _chunk, "doc_id long, chunk_hash long, pos int, length int"
+        )
     )
 
 
@@ -355,7 +360,7 @@ def chunk_pairs(ch: DataFrame, cfg: DedupConfig = DEFAULT) -> DataFrame:
 def substring_dup_pairs(
     docs: DataFrame, cfg: DedupConfig = DEFAULT, id_col: str = "doc_id"
 ) -> DataFrame:
-    """Production path: numpy CDC chunker (one Arrow pass) + chunk_pairs."""
+    """Production path: numpy CDC chunker (one pinned pass) + chunk_pairs."""
     return chunk_pairs(chunk_table(docs, cfg, id_col), cfg)
 
 

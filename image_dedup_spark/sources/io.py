@@ -13,10 +13,10 @@ marker; ``stage_exists`` gates resume.
 only materialization primitive: pipeline stages, connected-components
 rounds, merge batches, and the subtrees that several consumers inside
 one operator share (the LSH non-singleton band table, the ANN signature
-table). A pin's blocks live until Spark's ContextCleaner frees them,
-once the DataFrame reading them is garbage-collected; no caller owns a
-release. :func:`row_count` is the one-job count that materializes a
-stage.
+table, the substring chunk table). A pin's blocks live until Spark's
+ContextCleaner frees them, once the DataFrame reading them is
+garbage-collected; no caller owns a release. :func:`row_count` is the
+one-job count that materializes a stage.
 """
 
 from __future__ import annotations
@@ -93,7 +93,14 @@ def checkpoint(df: DataFrame) -> DataFrame:
     way to drop them), so static broadcast choices downstream still see
     a size. A loop that cuts every round therefore carries its estimate
     forward: it must grow the estimate by a bounded factor per round and
-    never square it (connected components, ``operators/components.py``)."""
+    never square it (connected components, ``operators/components.py``).
+
+    Nothing unpersists the result: its blocks are freed by Spark's
+    ContextCleaner after the DataFrame is garbage-collected in Python,
+    and the cleaner hears of that only at the driver JVM's next GC. On
+    an idle driver that can be ``spark.cleaner.periodicGC.interval``
+    (30 min by default) away, so a pin may outlive its last reader by
+    that long."""
     if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=False)

@@ -17,6 +17,7 @@ from image_dedup_spark.operators import exact as EX
 from image_dedup_spark.operators import lsh as LSH
 from image_dedup_spark.operators import similarity as SIM
 from image_dedup_spark.operators import simhash_block as SB
+from image_dedup_spark.operators import substring as SUB
 from image_dedup_spark.sources import io as IO
 
 
@@ -77,19 +78,30 @@ def test_lsh_topk_signature_cache_released(spark, fingerprints):
     _assert_freed_after_gc(spark, before)
 
 
+def test_chunk_table_pin_released(spark, corpus):
+    docs = corpus[0].select("doc_id", "text")
+    before = _storage_ids(spark)
+    df = SUB.substring_dup_pairs(docs)
+    assert IO.row_count(df) > 0
+    assert _storage_ids(spark) - before
+    del df
+    _assert_freed_after_gc(spark, before)
+
+
+def _counted(spark, df):
+    """``df`` through a pass-through ``mapInPandas`` that counts the rows
+    it reads into an accumulator: (counted df, accumulator)."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def pass_through(batches):
+        for b in batches:
+            acc.add(len(b))
+            yield b
+
+    return df.mapInPandas(pass_through, df.schema), acc
+
+
 def test_band_table_computed_once_per_candidate_pairs_call(spark, fingerprints):
-    sc = spark.sparkContext
-
-    def counted(df):
-        acc = sc.accumulator(0)
-
-        def pass_through(batches):
-            for b in batches:
-                acc.add(len(b))
-                yield b
-
-        return df.mapInPandas(pass_through, df.schema), acc
-
     # Exchange reuse off: the consumers of the non-singleton table then
     # share nothing below it, so the count shows whether the pin is the
     # one computation they all read (unpinned: 5 band passes for
@@ -105,8 +117,25 @@ def test_band_table_computed_once_per_candidate_pairs_call(spark, fingerprints):
             (False, SB.simhash_band_table, 2),
         ):
             n_rows = IO.row_count(band_table(fingerprints, DEFAULT))
-            bands, acc = counted(band_table(fingerprints, DEFAULT))
+            bands, acc = _counted(spark, band_table(fingerprints, DEFAULT))
             assert IO.row_count(LSH.candidate_pairs(bands, DEFAULT, star=star)) > 0
             assert acc.value == passes * n_rows, (star, acc.value, n_rows)
+    finally:
+        spark.conf.set("spark.sql.exchange.reuse", prev)
+
+
+def test_chunker_reads_each_doc_once_per_substring_call(spark, corpus):
+    # The shared-chunk count, its join and the pair expansion all read
+    # the chunk table; the pin makes them one chunker pass over the docs,
+    # with exchange reuse on (its default) and off.
+    docs = corpus[0].select("doc_id", "text")
+    n_docs = docs.count()
+    prev = spark.conf.get("spark.sql.exchange.reuse")
+    try:
+        for reuse in ("true", "false"):
+            spark.conf.set("spark.sql.exchange.reuse", reuse)
+            counted, acc = _counted(spark, docs)
+            assert IO.row_count(SUB.substring_dup_pairs(counted, DEFAULT)) > 0
+            assert acc.value == n_docs, (reuse, acc.value, n_docs)
     finally:
         spark.conf.set("spark.sql.exchange.reuse", prev)

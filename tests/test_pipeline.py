@@ -1,11 +1,13 @@
 """End-to-end pipeline + resume idempotence (SURVEY.md §5 tiers 3-4)."""
 
 import glob
+import random
 import re
 import shutil
 
 import pyspark.sql.functions as F
 
+from image_dedup_spark.config import DEFAULT
 from image_dedup_spark.plans.pipeline import run_pipeline
 from image_dedup_spark.sources import io as IO
 from image_dedup_spark.sources.io import write_stage
@@ -212,8 +214,6 @@ def test_pipeline_refuses_cross_mode_resume(spark, corpus, tmp_path_factory):
     # element type would not match what downstream recomputes expect
     from dataclasses import replace
 
-    from image_dedup_spark.config import DEFAULT
-
     with pytest.raises(RuntimeError, match="mode"):
         run_pipeline(
             spark, pages, cfg=replace(DEFAULT, minhash_bits=32),
@@ -241,3 +241,62 @@ def test_pipeline_hybrid_verify_matches_exact(spark, corpus):
         ).clusters.collect()
     }
     assert hybrid == exact
+
+
+def test_pipeline_adversarial_text(spark, corpus):
+    """Pages with null, empty, ``\\x0B``-only, ``\\x0B``-laced and
+    over-``max_text_bytes`` text (a multi-byte character straddling the
+    byte cut), null lang and null html, among normal pages, through the
+    whole pipeline with the substring family: every page lands exactly
+    once in clusters or quarantine, and the null columns are quarantined
+    with their reasons."""
+    pages, _ = corpus
+    normal = pages.filter(F.col("doc_id") % 8 == 0)
+    rng = random.Random(7)
+    vocab = [f"w{rng.randrange(10**6)}" for _ in range(500)]
+
+    def words(n, sep=" "):
+        return sep.join(rng.choice(vocab) for _ in range(n))
+
+    cut = DEFAULT.max_text_bytes
+    body = words(60_000)  # ~480k ASCII bytes, past the cut
+    straddle = {
+        "é": body[: cut - 1] + "é" + body[cut:],  # 2 bytes at cut-1
+        "😀": body[: cut - 2] + "😀" + body[cut:],  # 4 bytes at cut-2
+    }
+    for ch, t in straddle.items():
+        b = t.encode()
+        assert b[cut - 1] >= 0x80 and b[cut] >= 0x80, ch  # straddles the cut
+    laced = words(80, sep="\x0b")
+    good, en = "<html><body>{}</body></html>", "en"
+    adversarial = [
+        # (doc_id, text, html, lang, reject_reason)
+        (10_000, None, good.format(""), en, "text_too_short"),
+        (10_001, "", good.format(""), en, "text_too_short"),
+        (10_002, "\x0b" * 100, good.format("\x0b" * 100), en, None),
+        (10_003, laced, good.format(laced), en, None),
+        (10_004, laced + " tail", good.format(laced + " tail"), en, None),
+        (10_005, straddle["é"], good.format(straddle["é"]), en, None),
+        (10_006, straddle["😀"], good.format(straddle["😀"]), en, None),
+        (10_007, words(80), good.format("x"), None, "bad_lang"),
+        (10_008, words(80), None, en, "malformed_html"),
+    ]
+    adv = spark.createDataFrame(
+        [
+            (i, f"http://adversarial.example/{i}", h and h.encode(), t, lg)
+            for i, t, h, lg, _ in adversarial
+        ],
+        "doc_id long, url string, html binary, text string, lang string",
+    )
+    src = normal.unionByName(adv.withColumn("warc_ts", F.current_timestamp()))
+    res = run_pipeline(spark, src, include_substring=True)
+    assert "06_substring_pairs" in [m["stage"] for m in res.metrics]
+
+    clustered = [r.doc_id for r in res.clusters.select("doc_id").collect()]
+    quarantined = dict(
+        res.quarantine.select("doc_id", "reject_reason").collect()
+    )
+    every = [r.doc_id for r in src.select("doc_id").collect()]
+    assert sorted(clustered + list(quarantined)) == sorted(every)
+    for i, *_, reason in adversarial:
+        assert quarantined.get(i) == reason, (i, quarantined.get(i))

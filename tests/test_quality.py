@@ -12,9 +12,11 @@ def test_reject_reasons(spark):
         (2, "<html><body></body></html>", "", "en", "text_too_short"),
         (3, "<html><body>ok</body></html>", "y" * 100, "zz", "bad_lang"),
         (4, "<div>bad</span>", "z" * 100, "en", "malformed_html"),
+        (5, "<html><body>ok</body></html>", "w" * 100, None, "bad_lang"),
+        (6, None, "v" * 100, "en", "malformed_html"),
     ]
     df = spark.createDataFrame(
-        [(i, h.encode(), t, lg) for i, h, t, lg, _ in rows],
+        [(i, h and h.encode(), t, lg) for i, h, t, lg, _ in rows],
         "doc_id long, html binary, text string, lang string",
     )
     got = {
